@@ -312,10 +312,14 @@ def read_probe_baseline(repo_dir: str) -> tuple[float | None, str]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
     from vectordb_acc_and_speed_exp_spark.queries import load_all
-    from vectordb_acc_and_speed_exp_spark.session import get_spark
+    from vectordb_acc_and_speed_exp_spark.session import (
+        default_parallelism,
+        get_spark,
+    )
+
+    # SPARK_GRAFT_CPUS, else this host's CPUs (nproc)
+    cpus = default_parallelism()
 
     spark = get_spark("bench", cpus=cpus, shuffle_partitions=max(32, cpus))
     spark.sparkContext.setLogLevel("ERROR")

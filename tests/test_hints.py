@@ -10,6 +10,7 @@ is known large, results identical either way.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from vectordb_acc_and_speed_exp_spark.operators.hints import (
     BROADCAST_RERANK_MIN_CORPUS,
@@ -54,3 +55,41 @@ def test_sq_rerank_results_identical_with_and_without_hint(
         item_id="vec_id", n_corpus=10**6,
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+def _hint_count(df) -> int:
+    return df._jdf.queryExecution().analyzed().toString().count("ResolvedHint")
+
+
+@pytest.fixture(scope="module")
+def quant_store(spark, embeddings, tmp_path_factory):
+    from vectordb_acc_and_speed_exp_spark.api import VectorStore
+
+    vs = VectorStore(spark, str(tmp_path_factory.mktemp("hintstore")), dim=64)
+    vs.create_collection(
+        "c",
+        embeddings.select(F.col("vec_id").cast("string").alias("id"), "embedding"),
+    )
+    probe = [[float(x) for x in r.embedding] for r in embeddings.limit(2).collect()]
+    return vs, probe
+
+
+@pytest.mark.parametrize("mode", ["bq", "pq", "sq", "ivfbq", "ivfpq", "ivfsq"])
+def test_facade_passes_corpus_size_to_rerank_gate(quant_store, monkeypatch, mode):
+    """Every compressed facade mode hands the collection row count to the
+    rerank broadcast gate: with the gate dialled down to 1 row the
+    candidate side gains a ResolvedHint (on top of the always-broadcast
+    query side), and the rows are those of the ungated run."""
+    from vectordb_acc_and_speed_exp_spark.operators import hints
+
+    vs, probe = quant_store
+    kw = dict(query_vecs=probe, k=5, mode=mode, shortlist=30)
+    if mode.startswith("ivf"):
+        kw["n_probe"] = 2
+    plain = vs.query("c", **kw)
+    want = sorted(map(tuple, plain.collect()))
+    monkeypatch.setattr(hints, "BROADCAST_RERANK_MIN_CORPUS", 1)
+    gated = vs.query("c", **kw)
+    assert _has_hint(gated)
+    assert _hint_count(gated) == _hint_count(plain) + 1
+    assert sorted(map(tuple, gated.collect())) == want

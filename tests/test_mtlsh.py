@@ -390,6 +390,22 @@ def test_query_probe_plan_matches_reference_loop():
             assert struct.pack("<d", x[3]) == struct.pack("<d", y[3])
 
 
+def test_query_probe_plan_refuses_more_than_8_flips():
+    """The bit-identity argument above holds only up to 8 simultaneous
+    flips; past it the enumeration refuses instead of drifting."""
+    import numpy as np
+
+    planes = mtlsh.mt_planes(64, 12, 2, 42)
+    qv = np.random.default_rng(3).normal(size=(1, 64))
+    assert mtlsh.query_probe_plan(
+        [0], qv, planes, 2, 12, 4, flip_pool=10, max_flips=8
+    )
+    with pytest.raises(ValueError, match="max_flips=9"):
+        mtlsh.query_probe_plan(
+            [0], qv, planes, 2, 12, 4, flip_pool=10, max_flips=9
+        )
+
+
 def test_fresh_index_bucket_range_slices_disjoint_and_serve_equal(
     spark, embeddings, query_set, tmp_path
 ):

@@ -15,10 +15,28 @@ Query modes map to the engine's search operators:
             first graph query, kept fresh incrementally by add())
     mtlsh   operators.mtlsh                (multiprobe multi-table LSH over
             a table-partitioned signature index — the EP3 scale star)
-    ivfbq   operators.bq.ivfbq_search      (coarse-quantized packed binary
-            codes + exact re-rank — the EP5 composed scale star)
     auto    operators.filtered             (where= chooser: EP8's measured
             exact-vs-widened-IVF rule)
+
+The six compressed modes are one family table (``_quantizers``) over one
+operator skeleton, operators/quantized.py: approximate scan →
+top-``shortlist`` by (adist, item_id) → exact L2 re-rank → top-k by
+(dist, item_id). A mode is a quantizer family in a layout:
+
+    family  scorer (operators/<fam>.py)    flat mode   composed IVF mode
+    bq      packed 1-bit codes, codegen    bq          ivfbq (EP5 scale
+            Hamming (no Python in scan)                star)
+    pq      8x16 product codes, ADC LUT    pq          ivfpq
+            gather in a NumPy kernel
+    sq      int8 codes, decode + gemm in   sq          ivfsq
+            a NumPy kernel
+
+Flat code tables are whole-corpus artifacts under ``.<fam>_index/<name>``
+(frozen params; add() appends the batch's codes); composed tables live
+cell-partitioned inside the IVF root and add()/upsert() re-encode only
+the touched cells. Build, write, drift bookkeeping, calibration and
+serve run the same code for every family; each family supplies only its
+params, encode, reconstruction error and scorer.
 
 Text queries are encoded with the same (pluggable) encoder used at add
 time (V1/V6). Unlike ChromaDB — where every collection owns a private HNSW
@@ -29,8 +47,12 @@ physical copies (operators/snapshots.py).
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import shutil
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -39,6 +61,136 @@ from .io.local import local_df
 from .operators.embedding import DEFAULT_DIM, embed_documents
 from .operators.knn import exact_knn
 from .operators.probetune import CALIB_VERSION
+
+
+class _Quantizer(NamedTuple):
+    """What the facade needs of one compressed family beyond the shared
+    skeleton (operators/quantized.py); ``params`` is a dict.
+
+    - ``fit(corpus, dim)`` trains the frozen params;
+    - ``encode(df, params, passthrough=(), qerr=False)`` emits the codes,
+      plus each row's reconstruction error as ``_qerr`` when ``qerr``;
+    - ``baseline(corpus, params, dim)`` is the EP13 drift baseline
+      (None = the in-sample mean of ``_qerr``);
+    - ``to_meta(params)`` gives the JSON sidecar and the ``.npy`` array
+      (or None), ``from_meta(meta, npy_path)`` reads them back;
+    - ``can_recon(params)``: the params carry what ``_qerr`` needs;
+    - ``qerr_in_codes``: the FLAT code table keeps the ``_qerr`` column.
+    """
+
+    fit: Callable
+    encode: Callable
+    to_meta: Callable
+    from_meta: Callable
+    scorer: Callable
+    baseline: Callable | None = None
+    can_recon: Callable = lambda p: True
+    qerr_in_codes: bool = False
+
+
+_QUANT_FAMILIES = ("bq", "pq", "sq")
+
+
+@functools.cache
+def _quantizers() -> dict[str, _Quantizer]:
+    """The bq / pq / sq family table. Imports stay lazy: the exact and
+    graph routes never load the quantizer modules."""
+    import numpy as np
+
+    from .operators import bq, pq, sq
+
+    def with_recon(encode, recon):
+        # codegen families: the recon column rides the encode as a
+        # passthrough, so one projection yields codes and error
+        def enc(df, p, passthrough=(), qerr=False):
+            if qerr:
+                df = df.withColumn("_qerr", recon(F.col("embedding"), p))
+                passthrough = (*passthrough, "_qerr")
+            return encode(df, p, passthrough)
+
+        return enc
+
+    def bq_fit(corpus, dim):
+        sums, n = bq.bq_train(corpus, item_vec="embedding", dim=dim)
+        lo, hi = bq.bq_side_means(corpus, sums, n, item_vec="embedding")
+        return {"sums": sums, "n": n, "lo": lo, "hi": hi}
+
+    def pq_fit(corpus, dim):
+        m = 8 if dim % 8 == 0 else 4
+        return {"books": pq.pq_train(corpus, item_vec="embedding", m=m, k=16),
+                "m": m}
+
+    def sq_fit(corpus, dim):
+        vmin, scale = sq.sq_train(corpus, item_vec="embedding", dim=dim)
+        return {"vmin": vmin, "scale": scale}
+
+    def floats(a):
+        return [float(x) for x in a]
+
+    def array_or_none(m, key):
+        return np.array(m[key]) if key in m else None
+
+    return {
+        "bq": _Quantizer(
+            fit=bq_fit,
+            encode=with_recon(
+                lambda df, p, pt: bq.bq_encode(
+                    df, p["sums"], p["n"], item_id="id", passthrough=pt
+                ),
+                lambda v, p: bq.bq_recon_qerr(
+                    v, p["sums"], p["n"], p["lo"], p["hi"]
+                ),
+            ),
+            to_meta=lambda p: (
+                {"sums": [int(x) for x in p["sums"]], "n": p["n"],
+                 "lo": floats(p["lo"]), "hi": floats(p["hi"])},
+                None,
+            ),
+            from_meta=lambda m, npy: {
+                "sums": np.array(m["sums"], dtype=np.int64),
+                "n": int(m["n"]),
+                "lo": array_or_none(m, "lo"),
+                "hi": array_or_none(m, "hi"),
+            },
+            scorer=lambda p: bq.bq_scorer(p["sums"], p["n"]),
+            # sidecars written before the side means existed cannot
+            # reconstruct, so they record no drift
+            can_recon=lambda p: p["lo"] is not None,
+        ),
+        "pq": _Quantizer(
+            fit=pq_fit,
+            encode=lambda df, p, passthrough=(), qerr=False: pq.pq_encode(
+                df, p["books"], item_id="id", passthrough=passthrough,
+                keep_qerr="_qerr" if qerr else None,
+            ),
+            to_meta=lambda p: ({"m": p["m"], "k": 16}, p["books"]),
+            from_meta=lambda m, npy: {"books": np.load(npy)},
+            scorer=lambda p: pq.pq_scorer(p["books"]),
+            qerr_in_codes=True,
+        ),
+        "sq": _Quantizer(
+            fit=sq_fit,
+            encode=with_recon(
+                lambda df, p, pt: sq.sq_encode(
+                    df, p["vmin"], p["scale"], item_id="id", passthrough=pt
+                ),
+                lambda v, p: sq.sq_recon_qerr(v, p["vmin"], p["scale"]),
+            ),
+            to_meta=lambda p: (
+                {"vmin": floats(p["vmin"]), "scale": floats(p["scale"])},
+                None,
+            ),
+            from_meta=lambda m, npy: {
+                "vmin": np.array(m["vmin"], dtype=np.float64),
+                "scale": np.array(m["scale"], dtype=np.float64),
+            },
+            scorer=lambda p: sq.sq_scorer(p["vmin"], p["scale"]),
+            # OUT-OF-SAMPLE baseline (sq_holdout_qerr): training rows
+            # never clamp under params fit on exactly them, so an
+            # in-sample baseline fires on in-distribution appends
+            baseline=lambda corpus, p, dim: sq.sq_holdout_qerr(corpus, dim),
+        ),
+    }
 
 
 class VectorStore:
@@ -211,12 +363,8 @@ class VectorStore:
         # inline path keeps them bounded, but add(defer_maintenance=True)
         # accrues debt here instead (VERDICT r11 #5) — optimize() is the
         # explicit cadence that clears it
-        for _fam, root in (
-            ("bq", self._bq_path(name)),
-            ("pq", self._pq_path(name)),
-            ("sq", self._sq_path(name)),
-        ):
-            codes = os.path.join(root, "codes")
+        for fam in _QUANT_FAMILIES:
+            codes = self._qpaths(name, fam)[2]
             self._heal_on_read(codes)
             self._maybe_compact_codes(codes)
         # graph deferred-write buffer (VERDICT r12 #4): fold buffered
@@ -279,12 +427,8 @@ class VectorStore:
                 "pending_gens": pending,
                 "due": pending >= AUTO_COMPACT_APPENDS,
             }
-        for fam, root in (
-            ("bq", self._bq_path(name)),
-            ("pq", self._pq_path(name)),
-            ("sq", self._sq_path(name)),
-        ):
-            codes = os.path.join(root, "codes")
+        for fam in _QUANT_FAMILIES:
+            codes = self._qpaths(name, fam)[2]
             if os.path.isdir(codes) or os.path.isdir(
                 codes + "._pre_compact"
             ):
@@ -511,11 +655,10 @@ class VectorStore:
                 dirs.append(".mtlsh_index")
             from .operators.drift import drift_path
 
-            for d, p in ((".bq_index", self._bq_path(name)),
-                         (".pq_index", self._pq_path(name)),
-                         (".sq_index", self._sq_path(name))):
+            for fam in _QUANT_FAMILIES:
+                p = self._qpaths(name, fam)[0]
                 if os.path.exists(p) and not os.path.exists(drift_path(p)):
-                    dirs.append(d)
+                    dirs.append(f".{fam}_index")
             self._invalidate_indexes(name, dirs=tuple(dirs))
         return docs
 
@@ -628,7 +771,7 @@ class VectorStore:
             .parquet(path)
         )
 
-    def _defer_ivf_maintenance(self, ivf_root: str, docs: DataFrame) -> None:
+    def _defer_ivf_maintenance(self, name: str, docs: DataFrame) -> None:
         """Deferral valve, IVF surface (VERDICT r12 #4): the inline path
         REWRITES every cell directory the batch touches — and re-encodes
         those whole cells into each composed code table — which is
@@ -643,10 +786,6 @@ class VectorStore:
         compacted by optimize(). Drift bookkeeping is identical to the
         inline path: coarse assignment error plus each present family's
         reconstruction error under its frozen parameters."""
-        import json
-
-        import numpy as np
-
         from .operators.ann import ivf_assign
         from .operators.drift import (
             drift_path,
@@ -654,6 +793,7 @@ class VectorStore:
             record_batch_qerr,
         )
 
+        ivf_root = self._ivf_path(name)
         corpus_path = os.path.join(ivf_root, "corpus")
         cents = self.spark.read.parquet(os.path.join(ivf_root, "centroids"))
         track = os.path.exists(drift_path(ivf_root))
@@ -675,79 +815,20 @@ class VectorStore:
             .parquet(corpus_path)
         )
 
-        def _append(enc: DataFrame, sub: str) -> None:
-            (
-                enc.repartition("cell")
-                .sortWithinPartitions(enc.columns[0])
-                .write.mode("append")
-                .partitionBy("cell")
-                .parquet(os.path.join(ivf_root, sub))
-            )
-
-        bq_meta = os.path.join(ivf_root, "_bq_meta.json")
-        if os.path.exists(bq_meta):
-            from .operators.bq import bq_encode, bq_recon_qerr
-
-            with open(bq_meta) as f:
-                m = json.load(f)
-            sums = np.array(m["sums"], dtype=np.int64)
-            _append(
-                bq_encode(
-                    assigned, sums, int(m["n"]), item_id="id",
+        for fam, q in _quantizers().items():
+            _, meta, codes, npy, _ = self._qpaths(name, fam, ivf=True)
+            if os.path.exists(meta):
+                enc = self._encode_batch(
+                    q, self._load_params(q, meta, npy), assigned, codes,
                     passthrough=("cell",),
-                ),
-                "bqcodes",
-            )
-            if "lo" in m:
-                qm, qn = mean_coarse_qerr(
-                    docs.select(
-                        bq_recon_qerr(
-                            F.col("embedding"), sums, int(m["n"]),
-                            np.array(m["lo"]), np.array(m["hi"]),
-                        ).alias("_qerr")
-                    )
+                ).drop("_qerr")
+                (
+                    enc.repartition("cell")
+                    .sortWithinPartitions(enc.columns[0])
+                    .write.mode("append")
+                    .partitionBy("cell")
+                    .parquet(codes)
                 )
-                record_batch_qerr(os.path.join(ivf_root, "bqcodes"), qm, qn)
-        sq_meta = os.path.join(ivf_root, "_sq_meta.json")
-        if os.path.exists(sq_meta):
-            from .operators.sq import sq_encode, sq_recon_qerr
-
-            with open(sq_meta) as f:
-                sm = json.load(f)
-            svmin = np.array(sm["vmin"], dtype=np.float64)
-            sscale = np.array(sm["scale"], dtype=np.float64)
-            _append(
-                sq_encode(
-                    assigned, svmin, sscale, item_id="id",
-                    passthrough=("cell",),
-                ),
-                "sqcodes",
-            )
-            qm, qn = mean_coarse_qerr(
-                docs.select(
-                    sq_recon_qerr(
-                        F.col("embedding"), svmin, sscale
-                    ).alias("_qerr")
-                )
-            )
-            record_batch_qerr(os.path.join(ivf_root, "sqcodes"), qm, qn)
-        pq_meta = os.path.join(ivf_root, "_pq_meta.json")
-        if os.path.exists(pq_meta):
-            from .operators.pq import pq_encode
-
-            books = np.load(os.path.join(ivf_root, "pq_books.npy"))
-            pqc = os.path.join(ivf_root, "pqcodes")
-            track_pq = os.path.exists(drift_path(pqc))
-            enc = pq_encode(
-                assigned, books, item_id="id", passthrough=("cell",),
-                keep_qerr="_qerr" if track_pq else None,
-            )
-            if track_pq:
-                enc = enc.localCheckpoint(eager=True)
-                qm, qn = mean_coarse_qerr(enc)
-                record_batch_qerr(pqc, qm, qn)
-                enc = enc.drop("_qerr")
-            _append(enc, "pqcodes")
 
     def _freshen_indexes(
         self, name: str, docs: DataFrame, defer_maintenance: bool = False
@@ -770,8 +851,6 @@ class VectorStore:
         index for lazy rebuild from the already-landed collection rows
         (correct by construction), then absorb this batch; unmark only
         after every index absorbed it."""
-        import json
-
         # torn prior freshen: the collection rows are durable (landed
         # before _freshen_indexes), the derived artifacts may not be
         self._heal_torn_freshen(name)
@@ -803,7 +882,7 @@ class VectorStore:
         if defer_maintenance and os.path.exists(
             os.path.join(ivf_root, "_meta.json")
         ):
-            self._defer_ivf_maintenance(ivf_root, docs)
+            self._defer_ivf_maintenance(name, docs)
         elif os.path.exists(os.path.join(ivf_root, "_meta.json")):
             from .operators.ann import ivf_index_upsert
 
@@ -812,99 +891,20 @@ class VectorStore:
             cells = ivf_index_upsert(
                 self.spark, corpus_path, docs, cents, item_id="id"
             )
-            bq_meta = os.path.join(ivf_root, "_bq_meta.json")
-            if os.path.exists(bq_meta):
-                import numpy as np
+            from .operators.quantized import ivf_codes_upsert
 
-                from .operators.bq import ivfbq_codes_upsert
-
-                with open(bq_meta) as f:
-                    m = json.load(f)
-                ivfbq_codes_upsert(
-                    self.spark, corpus_path,
-                    os.path.join(ivf_root, "bqcodes"),
-                    np.array(m["sums"], dtype=np.int64), int(m["n"]),
-                    cells, item_id="id",
+            for fam, q in _quantizers().items():
+                _, meta, codes, npy, _ = self._qpaths(name, fam, ivf=True)
+                if not os.path.exists(meta):
+                    continue
+                p = self._load_params(q, meta, npy)
+                ivf_codes_upsert(
+                    self.spark, corpus_path, codes,
+                    lambda df, q=q, p=p: q.encode(df, p, ("cell",)), cells,
                 )
-                if "lo" in m:  # fine-quantizer drift (EP13, VERDICT r08 #2)
-                    from .operators.bq import bq_recon_qerr
-                    from .operators.drift import (
-                        mean_coarse_qerr,
-                        record_batch_qerr,
-                    )
-
-                    qm, qn = mean_coarse_qerr(
-                        docs.select(
-                            bq_recon_qerr(
-                                F.col("embedding"),
-                                np.array(m["sums"], dtype=np.int64),
-                                int(m["n"]),
-                                np.array(m["lo"]), np.array(m["hi"]),
-                            ).alias("_qerr")
-                        )
-                    )
-                    record_batch_qerr(
-                        os.path.join(ivf_root, "bqcodes"), qm, qn
-                    )
-            sq_meta = os.path.join(ivf_root, "_sq_meta.json")
-            if os.path.exists(sq_meta):
-                import numpy as np
-
-                from .operators.drift import (
-                    mean_coarse_qerr,
-                    record_batch_qerr,
-                )
-                from .operators.sq import ivfsq_codes_upsert, sq_recon_qerr
-
-                with open(sq_meta) as f:
-                    sm = json.load(f)
-                svmin = np.array(sm["vmin"], dtype=np.float64)
-                sscale = np.array(sm["scale"], dtype=np.float64)
-                ivfsq_codes_upsert(
-                    self.spark, corpus_path,
-                    os.path.join(ivf_root, "sqcodes"),
-                    svmin, sscale, cells, item_id="id",
-                )
-                qm, qn = mean_coarse_qerr(
-                    docs.select(
-                        sq_recon_qerr(
-                            F.col("embedding"), svmin, sscale
-                        ).alias("_qerr")
-                    )
-                )
-                record_batch_qerr(os.path.join(ivf_root, "sqcodes"), qm, qn)
-            pq_meta = os.path.join(ivf_root, "_pq_meta.json")
-            if os.path.exists(pq_meta):
-                import numpy as np
-
-                from .operators.pq import ivfpq_codes_upsert
-
-                ivfpq_codes_upsert(
-                    self.spark, corpus_path,
-                    os.path.join(ivf_root, "pqcodes"),
-                    np.load(os.path.join(ivf_root, "pq_books.npy")),
-                    cells, item_id="id",
-                )
-                from .operators.drift import (
-                    drift_path,
-                    mean_coarse_qerr,
-                    record_batch_qerr,
-                )
-                from .operators.pq import pq_encode
-
-                # fine-quantizer drift: the batch's reconstruction error
-                # under the frozen codebooks (skipped on pre-baseline
-                # artifacts — no extra batch job for them)
-                pqc = os.path.join(ivf_root, "pqcodes")
-                if os.path.exists(drift_path(pqc)):
-                    qm, qn = mean_coarse_qerr(
-                        pq_encode(
-                            docs.select("id", "embedding"),
-                            np.load(os.path.join(ivf_root, "pq_books.npy")),
-                            item_id="id", keep_qerr="_qerr",
-                        )
-                    )
-                    record_batch_qerr(pqc, qm, qn)
+                # fine-quantizer drift (EP13): the batch's reconstruction
+                # error under the frozen params
+                self._encode_batch(q, p, docs.select("id", "embedding"), codes)
         postings = self._postings_path(name)
         if os.path.exists(os.path.join(postings, "_META.json")):
             from .operators.postings import postings_upsert
@@ -952,85 +952,26 @@ class VectorStore:
         # between the baseline write and the meta write must route the
         # next add() to lazy rebuild, not a FileNotFoundError here
         # (ADVICE r09).
-        from .operators.drift import drift_path, mean_coarse_qerr, record_batch_qerr
+        from .operators.drift import drift_path
 
-        bqp = self._bq_path(name)
-        if os.path.exists(drift_path(bqp)) and os.path.exists(
-            os.path.join(bqp, "_meta.json")
-        ):
-            import numpy as np
-
-            from .operators.bq import bq_encode, bq_recon_qerr
-
-            with open(os.path.join(bqp, "_meta.json")) as f:
-                m = json.load(f)
-            sums = np.array(m["sums"], dtype=np.int64)
+        for fam, q in _quantizers().items():
+            root, meta, codes, npy, _ = self._qpaths(name, fam)
+            if not (
+                os.path.exists(drift_path(root)) and os.path.exists(meta)
+            ):
+                continue
+            enc = self._encode_batch(
+                q, self._load_params(q, meta, npy), docs, root
+            )
             # roll back a crashed auto-compaction BEFORE appending: an
             # append into the (absent) swap window would create a codes
             # dir holding only this batch while the full table sat in
             # ._pre_compact — silent data loss on the serve path
-            self._heal_on_read(os.path.join(bqp, "codes"))
-            bq_encode(
-                docs, sums, int(m["n"]), item_id="id"
-            ).write.mode("append").parquet(os.path.join(bqp, "codes"))
-            self._maybe_compact_codes(
-                os.path.join(bqp, "codes"), defer=defer_maintenance
-            )
-            qm, qn = mean_coarse_qerr(
-                docs.select(
-                    bq_recon_qerr(
-                        F.col("embedding"), sums, int(m["n"]),
-                        np.array(m["lo"]), np.array(m["hi"]),
-                    ).alias("_qerr")
-                )
-            )
-            record_batch_qerr(bqp, qm, qn)
-        pqp = self._pq_path(name)
-        if os.path.exists(drift_path(pqp)) and os.path.exists(
-            os.path.join(pqp, "_meta.json")
-        ):
-            import numpy as np
-
-            from .operators.pq import pq_encode
-
-            enc = pq_encode(
-                docs, np.load(os.path.join(pqp, "books.npy")),
-                item_id="id", keep_qerr="_qerr",
-            ).localCheckpoint(eager=True)  # one kernel pass: agg + append
-            qm, qn = mean_coarse_qerr(enc)
-            self._heal_on_read(os.path.join(pqp, "codes"))  # see bq note
-            enc.write.mode("append").parquet(os.path.join(pqp, "codes"))
-            record_batch_qerr(pqp, qm, qn)
-            self._maybe_compact_codes(
-                os.path.join(pqp, "codes"), defer=defer_maintenance
-            )
-        sqp = self._sq_path(name)
-        if os.path.exists(drift_path(sqp)) and os.path.exists(
-            os.path.join(sqp, "_meta.json")
-        ):
-            import numpy as np
-
-            from .operators.sq import sq_encode, sq_recon_qerr
-
-            with open(os.path.join(sqp, "_meta.json")) as f:
-                p = json.load(f)
-            vmin = np.array(p["vmin"], dtype=np.float64)
-            scale = np.array(p["scale"], dtype=np.float64)
-            self._heal_on_read(os.path.join(sqp, "codes"))  # see bq note
-            sq_encode(
-                docs, vmin, scale, item_id="id"
-            ).write.mode("append").parquet(os.path.join(sqp, "codes"))
-            self._maybe_compact_codes(
-                os.path.join(sqp, "codes"), defer=defer_maintenance
-            )
-            qm, qn = mean_coarse_qerr(
-                docs.select(
-                    sq_recon_qerr(F.col("embedding"), vmin, scale).alias(
-                        "_qerr"
-                    )
-                )
-            )
-            record_batch_qerr(sqp, qm, qn)
+            self._heal_on_read(codes)
+            (enc if q.qerr_in_codes else enc.drop("_qerr")).write.mode(
+                "append"
+            ).parquet(codes)
+            self._maybe_compact_codes(codes, defer=defer_maintenance)
         dd = self._dedup_path(name)
         if os.path.exists(os.path.join(dd, "bands")):
             from .streaming.dedup_maintenance import (
@@ -1049,61 +990,110 @@ class VectorStore:
             )
         os.remove(ip)
 
-    # -- binary-quantization codes (per-collection serving artifact) -------
+    # -- compressed code tables (bq / pq / sq, flat and composed) ----------
     def _bq_path(self, name: str) -> str:
         return os.path.join(self.root, ".bq_index", name)
 
-    def _ensure_bq_codes(self, name: str, corpus: DataFrame):
-        """Build (or reuse) the collection's packed-code table + exact-int
-        thresholds — the serving shape, so mode="bq" queries scan 16 B/row
-        instead of re-training and re-encoding the corpus per call. Any
-        write to the collection invalidates the artifact (pure function
-        of the corpus)."""
-        import json
+    def _pq_path(self, name: str) -> str:
+        return os.path.join(self.root, ".pq_index", name)
 
-        from .operators.bq import bq_encode, bq_recon_qerr, bq_side_means, bq_train
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
+    def _sq_path(self, name: str) -> str:
+        return os.path.join(self.root, ".sq_index", name)
 
-        path = self._bq_path(name)
-        meta = os.path.join(path, "_meta.json")
-        codes = os.path.join(path, "codes")
-        # codes dirs are now auto-compacted by the staged-swap rewrite
-        # (_maybe_compact_codes); a crash between its two renames leaves
-        # the data in full at ._pre_compact — roll back before any read,
-        # same as the collection's own read path
-        self._heal_on_read(codes)
-        if not os.path.exists(meta):
-            sums, n = bq_train(corpus, item_vec="embedding", dim=self.dim)
-            lo, hi = bq_side_means(corpus, sums, n, item_vec="embedding")
-            os.makedirs(path, exist_ok=True)
-            bq_encode(corpus, sums, n, item_id="id").write.mode(
-                "overwrite"
-            ).parquet(codes)
-            # EP13 drift baseline for the frozen 1-bit quantizer: mean
-            # reconstruction error under the side-mean decode
-            qerr_mean, qerr_n = mean_coarse_qerr(
-                corpus.select(
-                    bq_recon_qerr(
-                        F.col("embedding"), sums, n, lo, hi
-                    ).alias("_qerr")
-                )
-            )
-            write_drift_baseline(path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump(
-                    {"sums": [int(x) for x in sums], "n": n,
-                     "lo": [float(x) for x in lo],
-                     "hi": [float(x) for x in hi]}, f,
-                )
+    def _qpaths(self, name: str, fam: str, ivf: bool = False):
+        """(root, meta, codes, npy, drift_root) of a family's code
+        artifact. Flat: ``.<fam>_index/<name>/{_meta.json, codes,
+        books.npy}`` with the drift baseline at the root. Composed: inside
+        the IVF root as ``_<fam>_meta.json``, ``<fam>codes`` and
+        ``pq_books.npy``, the drift baseline INSIDE the codes dir
+        (dynamic cell overwrites never touch top-level files)."""
+        if ivf:
+            root = self._ivf_path(name)
+            codes = os.path.join(root, f"{fam}codes")
+            return (root, os.path.join(root, f"_{fam}_meta.json"), codes,
+                    os.path.join(root, "pq_books.npy"), codes)
+        root = os.path.join(self.root, f".{fam}_index", name)
+        return (root, os.path.join(root, "_meta.json"),
+                os.path.join(root, "codes"), os.path.join(root, "books.npy"),
+                root)
+
+    @staticmethod
+    def _load_params(q: _Quantizer, meta: str, npy: str) -> dict:
         with open(meta) as f:
-            m = json.load(f)
+            return q.from_meta(json.load(f), npy)
+
+    def _ensure_codes(self, name: str, fam: str, ivf: bool = False):
+        """Build (or reuse) a family's persisted code table + frozen params
+        — the serving shape, so a compressed query scans codes instead of
+        re-training and re-encoding the corpus per call. Flat tables are
+        whole-corpus artifacts (writes invalidate or append — see
+        _write/_freshen_indexes); composed tables are cell-partitioned
+        over the IVF layout (add()/upsert() re-encode only the touched
+        cells). The build also writes the family's EP13 drift baseline;
+        the meta sidecar is its commit point (written last). Returns
+        (codes_path, params, ivf_corpus_path, centroids) — the last two
+        None for flat tables."""
         import numpy as np
 
-        return (
-            self.spark.read.parquet(codes),
-            np.array(m["sums"], dtype=np.int64),
-            int(m["n"]),
+        from .operators.drift import mean_coarse_qerr, write_drift_baseline
+        from .operators.quantized import write_ivf_codes
+
+        q = _quantizers()[fam]
+        root, meta, codes, npy, drift_root = self._qpaths(name, fam, ivf)
+        corpus_path = cents = None
+        if ivf:
+            corpus_path, cents = self._ensure_ivf_index(name)
+        else:
+            # flat codes dirs are auto-compacted by a staged-swap rewrite
+            # (_maybe_compact_codes); a crash between its two renames
+            # leaves the data in full at ._pre_compact — roll back first
+            self._heal_on_read(codes)
+        if not os.path.exists(meta):
+            corpus = (
+                self.spark.read.parquet(corpus_path) if ivf else self.get(name)
+            )
+            p = q.fit(corpus, self.dim)
+            os.makedirs(root, exist_ok=True)
+            keep_qerr = q.qerr_in_codes and not ivf
+            enc = q.encode(corpus, p, ("cell",) if ivf else (), keep_qerr)
+            if ivf:
+                write_ivf_codes(enc, codes)
+            else:
+                enc.write.mode("overwrite").parquet(codes)
+            if keep_qerr:  # the encode already measured every row
+                base = mean_coarse_qerr(self.spark.read.parquet(codes))
+            elif q.baseline is not None:
+                base = q.baseline(corpus, p, self.dim)
+            else:
+                base = mean_coarse_qerr(q.encode(corpus, p, (), True))
+            write_drift_baseline(drift_root, *base)
+            js, arr = q.to_meta(p)
+            if arr is not None:
+                np.save(npy, arr)
+            with open(meta, "w") as f:
+                json.dump(js, f)
+        return codes, self._load_params(q, meta, npy), corpus_path, cents
+
+    def _encode_batch(
+        self, q: _Quantizer, p: dict, df: DataFrame, drift_root: str,
+        passthrough: tuple[str, ...] = (),
+    ) -> DataFrame:
+        """Encode a write batch with FROZEN params. When the artifact has a
+        drift baseline, the same pass folds the batch's mean
+        reconstruction error into the family's accumulator (EP13: the
+        encode the append already owes is the drift measurement)."""
+        from .operators.drift import (
+            drift_path,
+            mean_coarse_qerr,
+            record_batch_qerr,
         )
+
+        track = os.path.exists(drift_path(drift_root)) and q.can_recon(p)
+        enc = q.encode(df, p, passthrough, track)
+        if track:
+            enc = enc.localCheckpoint(eager=True)  # one pass: agg + write
+            record_batch_qerr(drift_root, *mean_coarse_qerr(enc))
+        return enc
 
     # -- IVF layout + centroids (per-collection, the 100 TB scan shape) ----
     def _ivf_path(self, name: str) -> str:
@@ -1120,8 +1110,6 @@ class VectorStore:
         [4, 256]; centroids train on a seeded sample when the collection
         is large (the coarse quantizer needs ~hundreds of points per
         cell, not the corpus)."""
-        import json
-
         from .operators.ann import (
             ivf_assign_blas,
             kmeans_centroids,
@@ -1240,43 +1228,35 @@ class VectorStore:
         from .operators.probetune import (
             DEFAULT_N_SAMPLE,
             SHORTLIST_FILE,
-            bq_shortlist_curve,
             curve_is_stale,
-            pq_shortlist_curve,
             read_curve_meta,
-            sq_shortlist_curve,
+            scorer_shortlist_curve,
             write_probe_curve,
         )
 
-        root = {"bq": self._bq_path, "pq": self._pq_path, "sq": self._sq_path}[
-            fam
-        ](name)
+        root = self._qpaths(name, fam)[0]
         fname = self._k_fname(SHORTLIST_FILE, k)
-        corpus = self.get(name)
         n = self._collection_nrows(name)
         meta = read_curve_meta(root, fname)
         if not curve_is_stale(meta, n, k=k):
             return {int(s): float(r) for s, r in meta["curve"].items()}
-        if fam == "bq":
-            encoded, sums, bn = self._ensure_bq_codes(name, corpus)
-            curve = bq_shortlist_curve(
-                corpus, encoded, sums, bn, k=k, item_id="id"
-            )
-        elif fam == "pq":
-            encoded, books = self._ensure_pq_codes(name, corpus)
-            curve = pq_shortlist_curve(
-                corpus, encoded, books, k=k, item_id="id"
-            )
-        else:
-            encoded, vmin, scale = self._ensure_sq_codes(name, corpus)
-            curve = sq_shortlist_curve(
-                corpus, encoded, vmin, scale, k=k, item_id="id"
-            )
+        encoded, scorer = self._flat_codes(name, fam)
+        curve = scorer_shortlist_curve(
+            self.get(name), encoded, scorer, k=k, item_id="id"
+        )
         write_probe_curve(
             root, curve, k, DEFAULT_N_SAMPLE, n_corpus=n,
             fname=fname,
         )
         return curve
+
+    def _flat_codes(self, name: str, fam: str):
+        """(codes DataFrame, Scorer) of the collection's flat table."""
+        codes, p, _, _ = self._ensure_codes(name, fam)
+        return (
+            self.spark.read.parquet(codes).drop("_qerr"),
+            _quantizers()[fam].scorer(p),
+        )
 
     # calibrated survivor-fraction bins for the filtered shortlist curves
     # (VERDICT r09 Missing #1; the 0.03 bin is VERDICT r10 #7). Filters
@@ -1314,15 +1294,12 @@ class VectorStore:
         from .functions.hashing import portable_hash64
         from .io.commitproto import publish_marker
         from .operators.probetune import (
-            bq_shortlist_curve,
             curve_is_stale,
-            pq_shortlist_curve,
             read_curve_meta,
-            sq_shortlist_curve,
+            scorer_shortlist_curve,
         )
 
-        root = {"bq": self._bq_path, "pq": self._pq_path,
-                "sq": self._sq_path}[fam](name)
+        root = self._qpaths(name, fam)[0]
         fname = self._k_fname("_filtered_shortlist_curve.json", k)
         n = self._collection_nrows(name)
         full = self._ensure_flat_shortlist_curve(name, fam, k=k)
@@ -1344,12 +1321,7 @@ class VectorStore:
             bins[1.0] = full
             return bins
         corpus = self.get(name)
-        if fam == "bq":
-            encoded, sums, bn = self._ensure_bq_codes(name, corpus)
-        elif fam == "pq":
-            encoded, books = self._ensure_pq_codes(name, corpus)
-        else:
-            encoded, vmin, scale = self._ensure_sq_codes(name, corpus)
+        encoded, scorer = self._flat_codes(name, fam)
         bins, skipped = {}, []
         for f in self._FILTERED_BINS:
             thresh = int(f * 1000)
@@ -1377,18 +1349,9 @@ class VectorStore:
                     F.lit(1000),
                 ) < thresh
             )
-            if fam == "bq":
-                bins[f] = bq_shortlist_curve(
-                    surv, surv_enc, sums, bn, k=k, item_id="id"
-                )
-            elif fam == "pq":
-                bins[f] = pq_shortlist_curve(
-                    surv, surv_enc, books, k=k, item_id="id"
-                )
-            else:
-                bins[f] = sq_shortlist_curve(
-                    surv, surv_enc, vmin, scale, k=k, item_id="id"
-                )
+            bins[f] = scorer_shortlist_curve(
+                surv, surv_enc, scorer, k=k, item_id="id"
+            )
         publish_marker(
             os.path.join(root, fname),
             {
@@ -1555,10 +1518,9 @@ class VectorStore:
         table). Keying by k is VERDICT r10 #1: a (n_probe, shortlist)
         pair certified for recall@10 under-delivers at k=25 — the deeper
         ground truth reaches more cells and deeper approximate ranks."""
-        import numpy as np
-
         from .io.commitproto import publish_marker
         from .operators.probetune import (
+            composed_scored,
             composed_serving_budget,
             curve_is_stale,
             read_curve_meta,
@@ -1577,62 +1539,11 @@ class VectorStore:
         if not stale and key in meta.get("targets", {}):
             return meta["targets"][key]
         probe_curve = self._ensure_probe_curve(name, k=k)
-        if mode == "ivfbq":
-            from .operators.bq import bq_encode, hamming
-
-            codes_path, _, _, sums, bn = self._ensure_ivfbq_codes(name)
-
-            def scored(qs, cells):
-                codes = self.spark.read.parquet(codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                qcodes = bq_encode(
-                    qs, sums, bn, item_id="query_id", item_vec="query_vec"
-                ).select(
-                    F.col("item_id").alias("query_id"),
-                    F.col("code_lo").alias("q_lo"),
-                    F.col("code_hi").alias("q_hi"),
-                )
-                return codes.crossJoin(F.broadcast(qcodes)).select(
-                    "query_id", "item_id", "cell",
-                    hamming(
-                        F.col("q_lo"), F.col("q_hi"),
-                        F.col("code_lo"), F.col("code_hi"),
-                    ).cast("double").alias("adist"),
-                )
-
-        elif mode == "ivfsq":
-            from .operators.sq import sq_search
-
-            codes_path, _, _, svmin, sscale = self._ensure_ivfsq_codes(name)
-
-            def scored(qs, cells):
-                codes = self.spark.read.parquet(codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                ranked = sq_search(
-                    qs, codes, svmin, sscale, k=1 << 30
-                ).select(
-                    "query_id", "item_id", F.col("sq_dist").alias("adist")
-                )
-                return ranked.join(codes.select("item_id", "cell"), "item_id")
-
-        else:
-            from .operators.pq import pq_search
-
-            codes_path, _, _, books = self._ensure_ivfpq_codes(name)
-
-            def scored(qs, cells):
-                codes = self.spark.read.parquet(codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                ranked = pq_search(qs, codes, books, k=1 << 30).select(
-                    "query_id", "item_id", F.col("adc_dist").alias("adist")
-                )
-                return ranked.join(codes.select("item_id", "cell"), "item_id")
-
+        fam = mode.removeprefix("ivf")
+        codes, p, _, _ = self._ensure_codes(name, fam, ivf=True)
         b = composed_serving_budget(
-            self.spark, corpus_path, cents, scored,
+            self.spark, corpus_path, cents,
+            composed_scored(self.spark, codes, _quantizers()[fam].scorer(p)),
             target_recall=target, k=k, item_id="id",
             probe_curve=probe_curve,
         )
@@ -1716,15 +1627,12 @@ class VectorStore:
 
         ivf_root = self._ivf_path(name)
         st = dict(drift_status(ivf_root))
-        st["families"] = {
-            "ivf": drift_status(ivf_root),
-            "ivfbq": drift_status(os.path.join(ivf_root, "bqcodes")),
-            "ivfpq": drift_status(os.path.join(ivf_root, "pqcodes")),
-            "ivfsq": drift_status(os.path.join(ivf_root, "sqcodes")),
-            "bq": drift_status(self._bq_path(name)),
-            "pq": drift_status(self._pq_path(name)),
-            "sq": drift_status(self._sq_path(name)),
-        }
+        st["families"] = {"ivf": drift_status(ivf_root)}
+        for fam in _QUANT_FAMILIES:
+            for ivf in (True, False):
+                st["families"][f"ivf{fam}" if ivf else fam] = drift_status(
+                    self._qpaths(name, fam, ivf)[4]
+                )
         return st
 
     def retrain_quantizers(self, name: str, families=None) -> None:
@@ -1747,231 +1655,6 @@ class VectorStore:
         )
         self._invalidate_indexes(name, dirs=dirs)
 
-    def _ensure_ivfbq_codes(self, name: str):
-        """Packed-code table over the IVF layout (FAISS IndexBinaryIVF
-        shape): directory pruning from the coarse quantizer x 16 B/row
-        Hamming scan inside each probed directory. Thresholds are frozen
-        at build; add()/upsert() re-encode only the touched cells
-        (ivfbq_codes_upsert). Returns (codes_path, corpus_path,
-        centroids, sums, n)."""
-        import json
-
-        import numpy as np
-
-        from .operators.bq import (
-            bq_recon_qerr,
-            bq_side_means,
-            bq_train,
-            write_ivfbq_codes,
-        )
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
-
-        corpus_path, cents = self._ensure_ivf_index(name)
-        path = self._ivf_path(name)
-        codes_path = os.path.join(path, "bqcodes")
-        meta = os.path.join(path, "_bq_meta.json")
-        if not os.path.exists(meta):
-            assigned = self.spark.read.parquet(corpus_path)
-            sums, n = bq_train(assigned, item_vec="embedding", dim=self.dim)
-            lo, hi = bq_side_means(assigned, sums, n, item_vec="embedding")
-            write_ivfbq_codes(assigned, sums, n, codes_path, item_id="id")
-            # EP13 fine-quantizer baseline, published INSIDE the codes
-            # dir (dynamic cell overwrites never touch top-level files)
-            qerr_mean, qerr_n = mean_coarse_qerr(
-                assigned.select(
-                    bq_recon_qerr(
-                        F.col("embedding"), sums, n, lo, hi
-                    ).alias("_qerr")
-                )
-            )
-            write_drift_baseline(codes_path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump(
-                    {"sums": [int(x) for x in sums], "n": n,
-                     "lo": [float(x) for x in lo],
-                     "hi": [float(x) for x in hi]}, f,
-                )
-        with open(meta) as f:
-            m = json.load(f)
-        return (
-            codes_path,
-            corpus_path,
-            cents,
-            np.array(m["sums"], dtype=np.int64),
-            int(m["n"]),
-        )
-
-    # -- flat PQ / SQ code tables (per-collection serving artifacts) -------
-    def _pq_path(self, name: str) -> str:
-        return os.path.join(self.root, ".pq_index", name)
-
-    def _ensure_pq_codes(self, name: str, corpus: DataFrame):
-        """Build (or reuse) the collection's flat PQ code table +
-        persisted codebooks — the serving shape for mode="pq" (ADC
-        short-list + exact re-rank, operators/pq.py). Same whole-corpus
-        discipline as the flat bq codes: any write invalidates (pure
-        function of the corpus), rebuild is lazy. Returns
-        (codes DataFrame, codebooks ndarray)."""
-        import json
-
-        import numpy as np
-
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
-        from .operators.pq import pq_encode, pq_train
-
-        path = self._pq_path(name)
-        meta = os.path.join(path, "_meta.json")
-        codes = os.path.join(path, "codes")
-        books_path = os.path.join(path, "books.npy")
-        self._heal_on_read(codes)  # crashed auto-compaction rollback
-        if not os.path.exists(meta):
-            m = 8 if self.dim % 8 == 0 else 4
-            books = pq_train(corpus, item_vec="embedding", m=m, k=16)
-            os.makedirs(path, exist_ok=True)
-            np.save(books_path, books)
-            # the encode kernel computes every sub-space distance anyway;
-            # keeping the reconstruction error costs one extra column and
-            # gives the EP13 drift baseline for the frozen codebooks
-            pq_encode(
-                corpus, books, item_id="id", keep_qerr="_qerr"
-            ).write.mode("overwrite").parquet(codes)
-            qerr_mean, qerr_n = mean_coarse_qerr(
-                self.spark.read.parquet(codes)
-            )
-            write_drift_baseline(path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump({"m": m, "k": 16}, f)
-        return (
-            self.spark.read.parquet(codes).drop("_qerr"),
-            np.load(books_path),
-        )
-
-    def _sq_path(self, name: str) -> str:
-        return os.path.join(self.root, ".sq_index", name)
-
-    def _ensure_sq_codes(self, name: str, corpus: DataFrame):
-        """Build (or reuse) the collection's flat SQ(int8) code table +
-        persisted per-dimension (vmin, scale) — the serving shape for
-        mode="sq". Params persist beside the codes (the ivfbq_params
-        pattern: serve does O(1) work, never re-runs the corpus min/max
-        aggregate; JSON float round-trip is exact — shortest-repr
-        doubles). Returns (codes DataFrame, vmin, scale)."""
-        import json
-
-        import numpy as np
-
-        from .operators.drift import write_drift_baseline
-        from .operators.sq import sq_encode, sq_holdout_qerr, sq_train
-
-        path = self._sq_path(name)
-        meta = os.path.join(path, "_meta.json")
-        codes = os.path.join(path, "codes")
-        self._heal_on_read(codes)  # crashed auto-compaction rollback
-        if not os.path.exists(meta):
-            vmin, scale = sq_train(corpus, item_vec="embedding", dim=self.dim)
-            os.makedirs(path, exist_ok=True)
-            sq_encode(corpus, vmin, scale, item_id="id").write.mode(
-                "overwrite"
-            ).parquet(codes)
-            # EP13 drift baseline for the frozen affine params, measured
-            # OUT-OF-SAMPLE (sq_holdout_qerr): the training rows never
-            # clamp under params fit on exactly them, so an in-sample
-            # baseline fires the trigger on in-distribution appends
-            qerr_mean, qerr_n = sq_holdout_qerr(corpus, self.dim)
-            write_drift_baseline(path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump(
-                    {"vmin": [float(x) for x in vmin],
-                     "scale": [float(x) for x in scale]}, f
-                )
-        with open(meta) as f:
-            p = json.load(f)
-        return (
-            self.spark.read.parquet(codes),
-            np.array(p["vmin"], dtype=np.float64),
-            np.array(p["scale"], dtype=np.float64),
-        )
-
-    def _ensure_ivfsq_codes(self, name: str):
-        """Int8 code table partitioned by the IVF layout's cells (FAISS
-        IVFScalarQuantizer shape): coarse-quantizer directory pruning ×
-        4× fewer bytes per row inside each probed directory,
-        near-lossless fidelity (EP5). Affine params freeze at build;
-        add()/upsert() re-encode only the touched cells
-        (ivfsq_codes_upsert — the same lockstep as the bq/pq twins).
-        Returns (codes_path, corpus_path, centroids, vmin, scale)."""
-        import json
-
-        import numpy as np
-
-        from .operators.drift import write_drift_baseline
-        from .operators.sq import sq_holdout_qerr, sq_train, write_ivfsq_codes
-
-        corpus_path, cents = self._ensure_ivf_index(name)
-        path = self._ivf_path(name)
-        codes_path = os.path.join(path, "sqcodes")
-        meta = os.path.join(path, "_sq_meta.json")
-        if not os.path.exists(meta):
-            assigned = self.spark.read.parquet(corpus_path)
-            vmin, scale = sq_train(
-                assigned, item_vec="embedding", dim=self.dim
-            )
-            write_ivfsq_codes(assigned, vmin, scale, codes_path, item_id="id")
-            # EP13 fine-quantizer baseline (clipping error of the frozen
-            # affine params), published inside the codes dir — measured
-            # OUT-OF-SAMPLE (sq_holdout_qerr): in-sample never clamps
-            qerr_mean, qerr_n = sq_holdout_qerr(assigned, self.dim)
-            write_drift_baseline(codes_path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump(
-                    {"vmin": [float(x) for x in vmin],
-                     "scale": [float(x) for x in scale]}, f,
-                )
-        with open(meta) as f:
-            p = json.load(f)
-        return (
-            codes_path,
-            corpus_path,
-            cents,
-            np.array(p["vmin"], dtype=np.float64),
-            np.array(p["scale"], dtype=np.float64),
-        )
-
-    def _ensure_ivfpq_codes(self, name: str):
-        """PQ code table partitioned by the IVF layout's cells (FAISS
-        IVFPQ shape): coarse-quantizer directory pruning × ADC scan of
-        ~dim/m bytes per row inside each probed directory. Codebooks are
-        frozen at build; add()/upsert() re-encode only the touched cells
-        (ivfpq_codes_upsert, same lockstep as the bq twin). Returns
-        (codes_path, corpus_path, centroids, codebooks)."""
-        import json
-
-        import numpy as np
-
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
-        from .operators.pq import pq_encode, pq_train, write_ivfpq_codes
-
-        corpus_path, cents = self._ensure_ivf_index(name)
-        path = self._ivf_path(name)
-        codes_path = os.path.join(path, "pqcodes")
-        books_path = os.path.join(path, "pq_books.npy")
-        meta = os.path.join(path, "_pq_meta.json")
-        if not os.path.exists(meta):
-            assigned = self.spark.read.parquet(corpus_path)
-            m = 8 if self.dim % 8 == 0 else 4
-            books = pq_train(assigned, item_vec="embedding", m=m, k=16)
-            np.save(books_path, books)
-            write_ivfpq_codes(assigned, books, codes_path, item_id="id")
-            # EP13 fine-quantizer baseline (reconstruction error of the
-            # frozen codebooks), published inside the codes dir
-            qerr_mean, qerr_n = mean_coarse_qerr(
-                pq_encode(assigned, books, item_id="id", keep_qerr="_qerr")
-            )
-            write_drift_baseline(codes_path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump({"m": m, "k": 16}, f)
-        return codes_path, corpus_path, cents, np.load(books_path)
-
     def _ensure_lsh_bits_curve(self, name: str, k: int = 10) -> dict:
         """Measured recall-vs-probe-bits curve for mode="lsh" (VERDICT
         r08 #4): a ground-truth neighbor is reachable at probe depth b
@@ -1980,8 +1663,6 @@ class VectorStore:
         cell-rank trick with buckets in place of cells. b = n_planes
         probes every bucket, so target_recall >= 1 is GUARANTEED exact
         (the whole corpus becomes the candidate set)."""
-        import json
-
         from .io.commitproto import publish_marker
         from .operators.probetune import curve_is_stale, lsh_bits_recall_curve
 
@@ -2727,80 +2408,9 @@ class VectorStore:
                 **({"ef_search": graph_ef} if graph_ef is not None else {}),
             )
             return self._merge_graph_pending(name, qd, res, k)
-        # The compressed-scan modes always serve from the PERSISTED
-        # full-collection code artifact. A ``where=`` restricts the CODE
-        # scan to the survivor set (semi-join BEFORE short-list
-        # selection — the short-list is the top-N ELIGIBLE rows by
-        # approximate distance, never a post-filter), and the exact
-        # re-rank runs over the filtered corpus, so strict pre-filter
-        # semantics hold. Quantizer parameters (thresholds / codebooks /
-        # affine params) are approximation machinery, not result
-        # semantics — re-training them per filtered query (the round-7
-        # behavior) was a corpus-sized job in the serve path; the
-        # short-list size remains the recall dial either way, and
-        # shortlist >= survivors stays exactly the filtered exact kNN.
-        def _survivor_codes(encoded):
-            if where is None:
-                return encoded
-            return encoded.join(
-                corpus.select(F.col("id").alias("item_id")),
-                "item_id", "left_semi",
-            )
-
-        if mode == "bq":
-            from .operators.bq import bq_search_rerank
-
-            encoded, sums, n = self._ensure_bq_codes(name, self.get(name))
-            return bq_search_rerank(
-                qdf, corpus, sums, n, k=k,
-                shortlist=self._resolve_shortlist(name, "bq", k, shortlist),
-                item_id="id", item_vec="embedding",
-                encoded=_survivor_codes(encoded),
-            ).select("query_id", "rank", "item_id", "dist")
-        if mode == "pq":
-            from .operators.pq import pq_search_rerank
-
-            encoded, books = self._ensure_pq_codes(name, self.get(name))
-            return pq_search_rerank(
-                qdf, corpus, _survivor_codes(encoded), books, k=k,
-                shortlist=self._resolve_shortlist(name, "pq", k, shortlist),
-                item_id="id", item_vec="embedding",
-            ).select("query_id", "rank", "item_id", "dist")
-        if mode == "sq":
-            from .operators.sq import sq_search_rerank
-
-            encoded, vmin, scale = self._ensure_sq_codes(name, self.get(name))
-            return sq_search_rerank(
-                qdf, corpus, _survivor_codes(encoded), vmin, scale, k=k,
-                shortlist=self._resolve_shortlist(name, "sq", k, shortlist),
-                item_id="id", item_vec="embedding",
-            ).select("query_id", "rank", "item_id", "dist")
-        if mode == "ivfpq":
-            from .operators.pq import ivfpq_search
-
-            codes_path, corpus_path, cents, books = self._ensure_ivfpq_codes(
-                name
-            )
-            n_probe, shortlist = self._resolve_composed(
-                name, "ivfpq", n_probe, shortlist, k=k
-            )
-            return ivfpq_search(
-                qdf, self.spark, codes_path, corpus_path, cents, books,
-                k=k, n_probe=n_probe, shortlist=shortlist, item_id="id",
-            )
-        if mode == "ivfsq":
-            from .operators.sq import ivfsq_search
-
-            codes_path, corpus_path, cents, svmin, sscale = (
-                self._ensure_ivfsq_codes(name)
-            )
-            n_probe, shortlist = self._resolve_composed(
-                name, "ivfsq", n_probe, shortlist, k=k
-            )
-            return ivfsq_search(
-                qdf, self.spark, codes_path, corpus_path, cents, svmin,
-                sscale, k=k, n_probe=n_probe, shortlist=shortlist,
-                item_id="id",
+        if mode in ("bq", "pq", "sq", "ivfbq", "ivfpq", "ivfsq"):
+            return self._quantized_query(
+                name, qdf, corpus, mode, k, shortlist, n_probe, where
             )
         if mode == "mtlsh":
             from .operators.mtlsh import mt_lsh_ann_pruned
@@ -2811,21 +2421,58 @@ class VectorStore:
                 corpus.select("id", "embedding"),
                 k=k, n_probe_buckets=mtlsh_budget, item_id="id",
             )
-        if mode == "ivfbq":
-            from .operators.bq import ivfbq_search
-
-            codes_path, corpus_path, cents, sums, n = self._ensure_ivfbq_codes(
-                name
-            )
-            n_probe, shortlist = self._resolve_composed(
-                name, "ivfbq", n_probe, shortlist, k=k
-            )
-            return ivfbq_search(
-                qdf, self.spark, codes_path, corpus_path, cents, sums, n,
-                k=k, n_probe=n_probe, shortlist=shortlist, item_id="id",
-            )
         raise ValueError(
             f"unknown mode {mode!r}; one of "
             "exact/blas/lsh/graph/bq/pq/sq/mtlsh/ivfbq/ivfpq/ivfsq/auto/"
             "mmr/hybrid"
         )
+
+    def _quantized_query(
+        self, name: str, qdf: DataFrame, corpus: DataFrame, mode: str,
+        k: int, shortlist: int | None, n_probe: int | None,
+        where: str | None,
+    ) -> DataFrame:
+        """The six compressed modes: one family scorer on the shared
+        shortlist → exact-rerank skeleton (operators/quantized.py), always
+        given the collection row count for the re-rank broadcast gate.
+
+        Flat modes serve from the PERSISTED full-collection code table. A
+        ``where=`` restricts the CODE scan to the survivor set (semi-join
+        BEFORE short-list selection — the short-list is the top-N
+        ELIGIBLE rows by approximate distance, never a post-filter), and
+        the exact re-rank runs over the filtered ``corpus``, so strict
+        pre-filter semantics hold. Quantizer params are approximation
+        machinery, not result semantics — re-training them per filtered
+        query was a corpus-sized job in the serve path; shortlist >=
+        survivors stays exactly the filtered exact kNN. Composed modes
+        never see ``where=`` (query() re-plans it to mode="auto")."""
+        from .operators.quantized import ivf_shortlist_search, shortlist_search
+
+        fam = mode.removeprefix("ivf")
+        codes, p, corpus_path, cents = self._ensure_codes(
+            name, fam, ivf=fam != mode
+        )
+        scorer = _quantizers()[fam].scorer(p)
+        n_corpus = self._collection_nrows(name)
+        if fam != mode:
+            n_probe, shortlist = self._resolve_composed(
+                name, mode, n_probe, shortlist, k=k
+            )
+            # ivfbq keeps its scorer's hamming column (its historical
+            # output); the flat modes return the four standard columns
+            return ivf_shortlist_search(
+                qdf, self.spark, codes, corpus_path, cents, scorer, k=k,
+                n_probe=n_probe, shortlist=shortlist, item_id="id",
+                n_corpus=n_corpus,
+            )
+        encoded = self.spark.read.parquet(codes).drop("_qerr")
+        if where is not None:
+            encoded = encoded.join(
+                corpus.select(F.col("id").alias("item_id")),
+                "item_id", "left_semi",
+            )
+        return shortlist_search(
+            qdf, encoded, corpus, scorer, k,
+            self._resolve_shortlist(name, fam, k, shortlist),
+            item_id="id", n_corpus=n_corpus,
+        ).select("query_id", "rank", "item_id", "dist")

@@ -217,7 +217,17 @@ def ivf_assign_blas(
     collection scale, ~256M-row pathology at 1M x 256 (measured at the
     round-13 scale-bench build). Same output contract: corpus columns +
     ``cell`` (+ ``keep_dist`` distance), nearest centroid by L2 with
-    ties to the smallest cell id."""
+    ties to the smallest cell id.
+
+    Near-tie caveat: distances come from the EXPANDED form ||v||² −
+    2v·c + ||c||², which loses low-order bits to cancellation, while
+    ivf_assign takes the direct sum of squared differences. When a
+    vector sits (to within that rounding) equidistant from two
+    centroids the two paths can pick different cells, so "same (id →
+    cell) map as ivf_assign" is an empirical fact (checked at sf0.001,
+    sf0.01 and sf0.1), not a guarantee — and a divergent row shifts the
+    build's ``keep_dist`` drift baseline slightly. Both cells are
+    equally near, so IVF search semantics hold either way."""
     import numpy as np
     import pandas as pd
 

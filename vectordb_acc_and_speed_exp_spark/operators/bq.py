@@ -44,10 +44,16 @@ bytes/recall curve vs SQ8 and PQ.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io.relcache import read_layout
+from .quantized import (
+    Scorer,
+    ivf_codes_upsert,
+    ivf_shortlist_search,
+    shortlist_search,
+    write_ivf_codes,
+)
 
 GRID = 1_000_000  # the repo-wide exact-int grid (1e-6 resolution)
 
@@ -287,75 +293,54 @@ def bq_recon_qerr(
 
 
 
-def _shortlist_rerank(
-    scored: DataFrame,
-    queries: DataFrame,
-    vec_source: DataFrame,
-    k: int,
-    shortlist: int,
-    query_id: str,
-    query_vec: str,
-    item_id: str,
-    item_vec: str,
-    n_corpus: int | None = None,
-) -> DataFrame:
-    """Shared tail of both BQ search paths: Hamming-shortlist window over
-    ``scored`` (query_id, item_id, hamming) → exact L2 re-rank against
-    ``vec_source`` → top-k by (dist, item_id). One place to own the
-    tie-break and output contract for the flat and composed layouts.
-    ``n_corpus`` gates the re-rank broadcast hint — see
-    operators/hints.py (both callers pass their training count ``n``,
-    which equals the corpus size)."""
-    from ..functions.vector import l2_dist
-    from .hints import broadcast_if_large
+def bq_scorer(sums: np.ndarray, n: int) -> Scorer:
+    """Hamming scan over packed codes, entirely in whole-stage codegen:
+    the encoded queries broadcast into a ``crossJoin`` and ``bit_count``
+    of the xor'd words scores every row — no Python anywhere. On the IVF
+    layouts each query row carries its allowed-cell array and an
+    ``array_contains`` filter enforces strict IVF semantics. Integer
+    distances: the (hamming, item_id) shortlist is deterministic."""
 
-    wham = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("item_id")
-    )
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(wham))
-        .filter(F.col("_rn") <= shortlist)
-        .select("query_id", "item_id", "hamming")
-    )
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")
-    )
-    vecs = vec_source.select(
-        F.col(item_id).alias("item_id"), F.col(item_vec).alias("_cvec")
-    )
-    reranked = (
-        # shortlist candidates are serving-bounded (queries x shortlist);
-        # broadcast hint gated on corpus size (guide §3.1/§8 at scale,
-        # fixed driver roundtrip below it — VERDICT r13 #1)
-        broadcast_if_large(cand, n_corpus).join(vecs, "item_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "item_id",
-            "hamming",
-            l2_dist(F.col("_qvec"), F.col("_cvec")).alias("dist"),
+    def score(queries, codes, allowed=None, limit=None, keep=()):
+        qside = bq_encode(
+            queries, sums, n, item_id="query_id", item_vec="query_vec"
+        ).select(
+            F.col("item_id").alias("query_id"),
+            F.col("code_lo").alias("q_lo"),
+            F.col("code_hi").alias("q_hi"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("item_id"))
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "item_id", "dist", "hamming")
-    )
+        if allowed is not None:
+            qid_t = dict(queries.dtypes)["query_id"]
+            rows = list(allowed.items())
+            ddl = f"query_id {qid_t}, cells array<int>"
+            if qid_t in ("bigint", "long", "int", "integer", "double", "string"):
+                from ..io.local import local_df
+
+                allow_df = local_df(queries.sparkSession, rows, ddl)
+            else:
+                allow_df = queries.sparkSession.createDataFrame(rows, ddl)
+            qside = qside.join(allow_df, "query_id")
+        scored = codes.crossJoin(F.broadcast(qside))
+        if allowed is not None:
+            scored = scored.filter(
+                F.array_contains(F.col("cells"), F.col("cell").cast("int"))
+            )
+        return scored.select(
+            "query_id", "item_id",
+            hamming(
+                F.col("q_lo"), F.col("q_hi"), F.col("code_lo"), F.col("code_hi")
+            ).alias("hamming"),
+            *keep,
+        )
+
+    return Scorer("hamming", score, carry=("hamming",))
 
 
 def bq_search_rerank(
-    queries: DataFrame,
-    corpus: DataFrame,
-    sums: np.ndarray,
-    n: int,
-    k: int = 10,
-    shortlist: int = 100,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
-    encoded: DataFrame | None = None,
+    queries: DataFrame, corpus: DataFrame, sums: np.ndarray, n: int,
+    k: int = 10, shortlist: int = 100, query_id: str = "query_id",
+    query_vec: str = "query_vec", item_id: str = "item_id",
+    item_vec: str = "embedding", encoded: DataFrame | None = None,
 ) -> DataFrame:
     """The production BQ path: Hamming shortlist over packed codes → exact
     L2 re-rank of the shortlist. Returns (query_id, rank, item_id, dist,
@@ -364,7 +349,8 @@ def bq_search_rerank(
     Both stages are deterministic (integer Hamming with id tie-break; the
     re-rank inherits exact_knn's (dist, id) ordering) so the WHOLE
     approximate query hash-matches an external SQL replay. shortlist ≥
-    corpus degenerates to exact k-NN (tested).
+    corpus degenerates to exact k-NN (tested). The training count ``n``
+    (= the corpus size) gates the re-rank broadcast hint.
 
     ``encoded``: a pre-built (item_id, code_lo, code_hi) table — the
     serving shape (codes are encoded once per corpus version and
@@ -372,173 +358,60 @@ def bq_search_rerank(
     (the one-shot/gate shape). Codes are a pure function of (corpus,
     sums, n), so both shapes return identical results (tested).
     """
-    qcodes = bq_encode(
-        queries, sums, n, item_id=query_id, item_vec=query_vec
-    ).select(
-        F.col("item_id").alias("query_id"),
-        F.col("code_lo").alias("q_lo"),
-        F.col("code_hi").alias("q_hi"),
-    )
-    ccodes = (
-        encoded
-        if encoded is not None
-        else bq_encode(corpus, sums, n, item_id=item_id, item_vec=item_vec)
-    )
-    scored = ccodes.crossJoin(F.broadcast(qcodes)).select(
-        "query_id",
-        "item_id",
-        hamming(
-            F.col("q_lo"), F.col("q_hi"), F.col("code_lo"), F.col("code_hi")
-        ).alias("hamming"),
-    )
-    return _shortlist_rerank(
-        scored, queries, corpus, k, shortlist,
+    if encoded is None:
+        encoded = bq_encode(corpus, sums, n, item_id=item_id, item_vec=item_vec)
+    return shortlist_search(
+        queries, encoded, corpus, bq_scorer(sums, n), k, shortlist,
         query_id, query_vec, item_id, item_vec, n_corpus=n,
     )
 
 
+def _ivf_encoder(sums, n, item_id, item_vec):
+    return lambda df: bq_encode(
+        df, sums, n, item_id=item_id, item_vec=item_vec, passthrough=("cell",)
+    )
+
+
 def write_ivfbq_codes(
-    corpus_assigned: DataFrame,
-    sums: np.ndarray,
-    n: int,
-    path: str,
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
+    corpus_assigned: DataFrame, sums: np.ndarray, n: int, path: str,
+    item_id: str = "item_id", item_vec: str = "embedding",
 ) -> None:
     """Encode an IVF-assigned corpus (must carry ``cell``) to packed bit
     codes and persist them partitioned by cell — the IVF-BQ layout
     (FAISS IndexBinaryIVF): directory pruning from the coarse quantizer ×
     32× fewer bytes inside each directory. 16 B/row payload (two longs);
     the whole composed index for 10⁹ vectors is ~16 GB."""
-    bq_encode(
-        corpus_assigned, sums, n, item_id=item_id, item_vec=item_vec,
-        passthrough=("cell",),
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
+    write_ivf_codes(_ivf_encoder(sums, n, item_id, item_vec)(corpus_assigned), path)
 
 
 def ivfbq_codes_upsert(
-    spark,
-    corpus_path: str,
-    codes_path: str,
-    sums: np.ndarray,
-    n: int,
-    cells: list[int],
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
+    spark, corpus_path: str, codes_path: str, sums: np.ndarray, n: int,
+    cells: list[int], item_id: str = "item_id", item_vec: str = "embedding",
 ) -> None:
-    """Refresh the derived IVF-BQ code table for the given cells after a
-    base-corpus upsert: re-encode exactly those cells (partition-pruned
-    scan) with the FROZEN thresholds and dynamic-partition-overwrite the
-    matching code directories — the same lockstep contract as
-    ivfsq_codes_upsert (codes are a pure function of the corpus layout;
-    replay converges to the same bytes). Thresholds intentionally do not
-    move; re-training is an offline rebuild like the centroids."""
-    if not cells:
-        return
-    from pyspark.sql import functions as _F
-
-    from .ann import drop_empty_cell_dirs
-
-    fresh = read_layout(spark, corpus_path).filter(
-        _F.col("cell").isin(list(cells))
+    """Re-encode the given cells of the IVF-BQ code table from the
+    post-upsert corpus with the FROZEN thresholds (the lockstep contract
+    of operators/quantized.py::ivf_codes_upsert)."""
+    ivf_codes_upsert(
+        spark, corpus_path, codes_path,
+        _ivf_encoder(sums, n, item_id, item_vec), cells,
     )
-    (
-        bq_encode(
-            fresh, sums, n, item_id=item_id, item_vec=item_vec,
-            passthrough=("cell",),
-        )
-        .repartition("cell")
-        # post-rename name: bq_encode emits "item_id"; sorting by the
-        # caller's original id name only resolved via Spark's
-        # missing-reference fallback and breaks if the encode output is
-        # ever materialized first
-        .sortWithinPartitions("item_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(codes_path)
-    )
-    present = {r.cell for r in fresh.select("cell").distinct().collect()}
-    drop_empty_cell_dirs(codes_path, set(cells) - present)
 
 
 def ivfbq_search(
-    queries: DataFrame,
-    spark,
-    codes_path: str,
-    corpus_path: str,
-    centroids: DataFrame,
-    sums: np.ndarray,
-    n: int,
-    k: int = 10,
-    n_probe: int = 4,
-    shortlist: int = 100,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    item_id: str = "item_id",
+    queries: DataFrame, spark, codes_path: str, corpus_path: str,
+    centroids: DataFrame, sums: np.ndarray, n: int, k: int = 10,
+    n_probe: int = 4, shortlist: int = 100, query_id: str = "query_id",
+    query_vec: str = "query_vec", item_id: str = "item_id",
     item_vec: str = "embedding",
 ) -> DataFrame:
     """Composed IVF-BQ search — the only composed ANN layout with NO
-    Python anywhere in the scan:
-
-    1. coarse probe: n_probe nearest cells per query → ``cell IN (...)``
-       partition filter on the codes scan AND the re-rank fetch;
-    2. Hamming scan of only the probed cells' packed codes, entirely in
-       whole-stage codegen (bit_count+xor), with per-query allowed-cell
-       arrays enforcing strict IVF semantics (array_contains filter on
-       the broadcast query row);
-    3. exact re-rank of the short-list against the same pruned
-       directories.
-
+    Python anywhere in the scan: coarse probe → codegen Hamming scan of
+    only the probed cells' packed codes → exact re-rank against the same
+    pruned directories. Returns (query_id, rank, item_id, dist, hamming).
     Full probe + shortlist ≥ corpus degenerates to exact k-NN (tested —
     the same metamorphic identity as IVF-SQ/IVF-PQ)."""
-    from pyspark.sql import functions as _F
-
-    from .knn import exact_knn
-
-    qcells = exact_knn(
-        queries, centroids, k=n_probe,
-        query_id=query_id, query_vec=query_vec,
-        item_id="cell", item_vec="centroid",
-    ).select(_F.col("query_id"), _F.col("item_id").alias("cell"))
-    probe_rows = qcells.collect()
-    probed = sorted({r.cell for r in probe_rows})
-    allowed: dict = {}
-    for r in probe_rows:
-        allowed.setdefault(r.query_id, []).append(r.cell)
-
-    qcodes = bq_encode(
-        queries, sums, n, item_id=query_id, item_vec=query_vec
-    ).select(
-        _F.col("item_id").alias("query_id"),
-        _F.col("code_lo").alias("q_lo"),
-        _F.col("code_hi").alias("q_hi"),
-    )
-    qid_t = dict(queries.dtypes)[query_id]
-    allow_rows = [(qid, sorted(cs)) for qid, cs in allowed.items()]
-    allow_ddl = f"query_id {qid_t}, cells array<int>"
-    if qid_t in ("bigint", "long", "int", "integer", "double", "string"):
-        from ..io.local import local_df
-
-        allow_df = local_df(spark, allow_rows, allow_ddl)
-    else:
-        allow_df = spark.createDataFrame(allow_rows, allow_ddl)
-    qside = qcodes.join(allow_df, "query_id")
-
-    codes = read_layout(spark, codes_path).filter(_F.col("cell").isin(probed))
-    scored = codes.crossJoin(_F.broadcast(qside)).filter(
-        _F.array_contains(_F.col("cells"), _F.col("cell").cast("int"))
-    ).select(
-        "query_id",
-        "item_id",
-        hamming(
-            _F.col("q_lo"), _F.col("q_hi"), _F.col("code_lo"), _F.col("code_hi")
-        ).alias("hamming"),
-    )
-    pruned_vecs = read_layout(spark, corpus_path).filter(
-        _F.col("cell").isin(probed)
-    )
-    return _shortlist_rerank(
-        scored, queries, pruned_vecs, k, shortlist,
-        query_id, query_vec, item_id, item_vec, n_corpus=n,
+    return ivf_shortlist_search(
+        queries, spark, codes_path, corpus_path, centroids,
+        bq_scorer(sums, n), k, n_probe, shortlist, query_id, query_vec,
+        item_id, item_vec, n_corpus=n,
     )

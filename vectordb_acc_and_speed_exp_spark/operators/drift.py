@@ -32,7 +32,7 @@ Why this statistic:
   error, so "1.4x the training error" means the same thing at any
   corpus size.
 
-Trigger value: EP13 (tools/drift_study.py, EP13_DRIFT.md) measures
+Trigger value: EP13 (EP13_DRIFT.md; study script in commit 2e36c6c) measures
 recall vs ratio on progressively shifted batches at serving budgets
 (sf0.01, n_probe=4 of ~77 cells): drifted-query recall holds through
 ratio 1.21 (0.70-0.72), is already below the reference floor at 1.49

@@ -172,7 +172,17 @@ def query_probe_plan(
     reference uses 5 fixed queries) while the enumeration is
     O(L * C(flip_pool, <=max_flips)) ~ 40k rows/query, a numpy-cheap plan
     whose output is a broadcast-size join table.
+
+    ``max_flips`` > 8 raises ValueError: the vectorized cost sum below is
+    bit-identical to the reference loop only while every subset sum
+    stays within numpy's sequential (<= 8 element) summation block.
     """
+    if max_flips > 8:
+        raise ValueError(
+            f"query_probe_plan: max_flips={max_flips} > 8 — the "
+            "vectorized cost sum is bit-identical to the reference loop "
+            "only up to 8 simultaneous flips"
+        )
     pw = 1 << np.arange(n_planes)
     flip_pool = min(flip_pool, n_planes)
     max_flips = min(max_flips, flip_pool)

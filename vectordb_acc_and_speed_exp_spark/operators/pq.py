@@ -21,10 +21,18 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io.relcache import read_layout
+from .quantized import (
+    Scorer,
+    approx_topk,
+    ivf_codes_upsert,
+    ivf_shortlist_search,
+    kernel_scorer,
+    shortlist_search,
+    write_ivf_codes,
+)
 
 
 def pq_train(
@@ -119,76 +127,45 @@ def pq_encode(
     return src.mapInPandas(encode, schema=schema)
 
 
-def pq_search(
-    queries: DataFrame,
-    encoded: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-) -> DataFrame:
-    """ADC search over PQ codes: per (query, batch) one LUT gather+sum.
-    Returns (query_id, rank, item_id, adc_dist) — approximate distances;
-    re-rank the short-list with exact_knn for production recall."""
-    spark = queries.sparkSession
+def pq_scorer(codebooks: np.ndarray) -> Scorer:
+    """ADC scan: per query an m x k LUT of exact
+    query-subvector-to-centroid distances (built once on the driver); a
+    code row's distance is one LUT gather+sum per Arrow batch."""
     m, kcent, dsub = codebooks.shape
-    qrows = queries.select(
-        F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
-    ).collect()
-    qids = np.array([r._qid for r in qrows])
-    Q = np.array([r._qv for r in qrows], dtype=np.float64)
-    # LUT[q, s, c] = ||q_sub(s) - centroid(s, c)||^2  (exact, tiny)
-    luts = np.empty((len(qids), m, kcent), dtype=np.float64)
-    for s in range(m):
-        qsub = Q[:, s * dsub : (s + 1) * dsub]
-        luts[:, s, :] = ((qsub[:, None, :] - codebooks[s][None, :, :]) ** 2).sum(
-            axis=2
-        )
-    b_luts = spark.sparkContext.broadcast(luts)
-    b_qids = spark.sparkContext.broadcast(qids)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        L, Qi = b_luts.value, b_qids.value
-        sub_idx = np.arange(m)
-        for pdf in batches:
-            C = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (n, m)
-            ids = pdf["item_id"].to_numpy()
-            # D[q, n] = sum_s L[q, s, C[n, s]]
-            D = L[:, sub_idx, C].sum(axis=2)  # (nq, n)
-            kk = min(k, D.shape[1])
-            part = np.argpartition(D, kk - 1, axis=1)[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(Qi, kk),
-                    "item_id": ids[part].ravel(),
-                    "adc_dist": np.sqrt(np.take_along_axis(D, part, axis=1)).ravel(),
-                }
-            )
+    def luts(Q):
+        # LUT[q, s, c] = ||q_sub(s) - centroid(s, c)||^2  (exact, tiny)
+        L = np.empty((len(Q), m, kcent), dtype=np.float64)
+        for s in range(m):
+            qsub = Q[:, s * dsub : (s + 1) * dsub]
+            L[:, s, :] = ((qsub[:, None, :] - codebooks[s][None, :, :]) ** 2).sum(axis=2)
+        return L
 
-    qid_t = dict(queries.dtypes)[query_id]
-    iid_t = dict(encoded.dtypes)["item_id"]
-    partial = encoded.mapInPandas(
-        scan, schema=f"query_id {qid_t}, item_id {iid_t}, adc_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("item_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "item_id", "adc_dist")
+    def sqdist(L, codes):
+        # D[q, n] = sum_s L[q, s, C[n, s]]
+        C = np.array(codes.tolist(), dtype=np.int64)
+        return L[:, np.arange(m), C].sum(axis=2)
+
+    return kernel_scorer("adc_dist", luts, sqdist)
+
+
+def pq_search(
+    queries: DataFrame, encoded: DataFrame, codebooks: np.ndarray,
+    k: int = 10, query_id: str = "query_id", query_vec: str = "query_vec",
+) -> DataFrame:
+    """ADC search over PQ codes. Returns (query_id, rank, item_id,
+    adc_dist) — approximate distances; re-rank the short-list
+    (pq_search_rerank) for production recall."""
+    return approx_topk(
+        queries, encoded, pq_scorer(codebooks), k, query_id, query_vec
     )
 
 
 def pq_search_rerank(
-    queries: DataFrame,
-    corpus: DataFrame,
-    encoded: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    shortlist: int = 100,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
+    queries: DataFrame, corpus: DataFrame, encoded: DataFrame,
+    codebooks: np.ndarray, k: int = 10, shortlist: int = 100,
+    query_id: str = "query_id", query_vec: str = "query_vec",
+    item_id: str = "item_id", item_vec: str = "embedding",
     n_corpus: int | None = None,
 ) -> DataFrame:
     """Production PQ pattern: ADC short-list over codes (compressed scan),
@@ -196,123 +173,57 @@ def pq_search_rerank(
     short-list's coverage of the true top-k; the exact scan touches
     shortlist/n of the corpus. ``n_corpus`` gates the re-rank broadcast
     hint — see operators/hints.py."""
-    from ..functions.vector import l2_dist
-    from .hints import broadcast_if_large
+    return shortlist_search(
+        queries, encoded, corpus, pq_scorer(codebooks), k, shortlist,
+        query_id, query_vec, item_id, item_vec, n_corpus=n_corpus,
+    )
 
-    cand = pq_search(
-        queries, encoded, codebooks, k=shortlist, query_id=query_id, query_vec=query_vec
-    ).select("query_id", "item_id")
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")
-    )
-    vecs = corpus.select(F.col(item_id).alias("item_id"), F.col(item_vec).alias("_cvec"))
-    scored = (
-        # shortlist candidates are serving-bounded (queries x shortlist);
-        # broadcast hint gated on corpus size (guide §3.1/§8 at scale,
-        # fixed driver roundtrip below it — VERDICT r13 #1)
-        broadcast_if_large(cand, n_corpus).join(vecs, "item_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id", "item_id", l2_dist(F.col("_qvec"), F.col("_cvec")).alias("dist")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "item_id", "dist")
+
+def _ivf_encoder(codebooks, item_id, item_vec):
+    return lambda df: pq_encode(
+        df, codebooks, item_id=item_id, item_vec=item_vec,
+        passthrough=("cell",),
     )
 
 
 def write_ivfpq_codes(
-    corpus_assigned: DataFrame,
-    codebooks: np.ndarray,
-    path: str,
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
+    corpus_assigned: DataFrame, codebooks: np.ndarray, path: str,
+    item_id: str = "item_id", item_vec: str = "embedding",
 ) -> None:
     """Encode an IVF-assigned corpus (must carry ``cell``) to PQ codes and
     persist them partitioned by cell — the IVF-PQ index layout (FAISS
-    IVFPQ / SPANN-family storage): the coarse quantizer prunes directories,
-    the fine quantizer shrinks the bytes scanned inside each directory.
-    At 768-dim float32 this is n_probe/n_cells of the corpus x ~700x fewer
-    bytes per row before any float vector is touched."""
-    pq_encode(
-        corpus_assigned, codebooks, item_id=item_id, item_vec=item_vec,
-        passthrough=("cell",),
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
+    IVFPQ / SPANN-family storage). At 768-dim float32 this is
+    n_probe/n_cells of the corpus x ~700x fewer bytes per row before any
+    float vector is touched."""
+    write_ivf_codes(_ivf_encoder(codebooks, item_id, item_vec)(corpus_assigned), path)
 
 
 def ivfpq_codes_upsert(
-    spark,
-    corpus_path: str,
-    codes_path: str,
-    codebooks: np.ndarray,
-    cells: list[int],
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
+    spark, corpus_path: str, codes_path: str, codebooks: np.ndarray,
+    cells: list[int], item_id: str = "item_id", item_vec: str = "embedding",
 ) -> None:
-    """Refresh the derived IVF-PQ code table for the given cells after the
-    base IVF corpus was upserted — the PQ twin of
-    sq.ivfsq_codes_upsert: partition-pruned re-encode of exactly the
-    touched cells with FROZEN codebooks, dynamic partition overwrite of
-    the matching code directories. The codes layout stays a pure function
-    of the corpus layout, so replayed batches converge (exactly-once
-    extends to the compressed index)."""
-    if not cells:
-        return
-    from .ann import drop_empty_cell_dirs
-
-    fresh = read_layout(spark, corpus_path).filter(F.col("cell").isin(list(cells)))
-    (
-        pq_encode(
-            fresh, codebooks, item_id=item_id, item_vec=item_vec,
-            passthrough=("cell",),
-        )
-        .repartition("cell")
-        # pq_encode normalizes the id column to "item_id" whatever the
-        # caller's name is — sorting by the caller's name breaks for any
-        # item_id != "item_id" (found by the facade's id-named corpus)
-        .sortWithinPartitions("item_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(codes_path)
+    """Re-encode the given cells of the IVF-PQ code table from the
+    post-upsert corpus with FROZEN codebooks (the lockstep contract of
+    operators/quantized.py::ivf_codes_upsert)."""
+    ivf_codes_upsert(
+        spark, corpus_path, codes_path,
+        _ivf_encoder(codebooks, item_id, item_vec), cells,
     )
-    present = {r.cell for r in fresh.select("cell").distinct().collect()}
-    drop_empty_cell_dirs(codes_path, set(cells) - present)
 
 
 def ivfpq_search(
-    queries: DataFrame,
-    spark,
-    codes_path: str,
-    corpus_path: str,
-    centroids: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    n_probe: int = 4,
-    shortlist: int = 100,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
-    predicate: Column | str | None = None,
+    queries: DataFrame, spark, codes_path: str, corpus_path: str,
+    centroids: DataFrame, codebooks: np.ndarray, k: int = 10,
+    n_probe: int = 4, shortlist: int = 100, query_id: str = "query_id",
+    query_vec: str = "query_vec", item_id: str = "item_id",
+    item_vec: str = "embedding", predicate: Column | str | None = None,
     n_corpus: int | None = None,
 ) -> DataFrame:
     """Composed IVF-PQ search — the production large-corpus configuration:
-
-    1. coarse probe: each query's ``n_probe`` nearest cells (tiny centroid
-       kNN, driver-resolved) → ``cell IN (...)`` partition filter on BOTH
-       the codes scan and the re-rank vector fetch;
-    2. ADC scan of only the probed cells' codes, per-query cell masks keep
-       strict IVF semantics (a row is scored only for queries that probed
-       its cell) → per-query short-list of ``shortlist`` candidates;
-    3. exact re-rank: join the short-list ids to the cell-partitioned
-       vector layout (same pruned directories) and compute true L2.
-
-    Full probe (n_probe = n_cells) with shortlist >= corpus is exact —
-    the metamorphic identity the tests pin.
+    coarse probe → ADC scan of only the probed cells' codes → exact
+    re-rank against the same pruned directories. Full probe with
+    shortlist >= corpus is exact — the metamorphic identity the tests
+    pin.
 
     ``predicate`` is an optional filtered-ANN pre-filter (the vector-DB
     ``where=``), applied to the CODES scan before ADC scoring and to the
@@ -324,113 +235,8 @@ def ivfpq_search(
 
     ``n_corpus`` gates the re-rank broadcast hint — see
     operators/hints.py."""
-    from ..functions.vector import l2_dist
-    from .hints import broadcast_if_large
-    from .knn import exact_knn
-
-    m, kcent, dsub = codebooks.shape
-    qcells = exact_knn(
-        queries, centroids, k=n_probe,
-        query_id=query_id, query_vec=query_vec,
-        item_id="cell", item_vec="centroid",
-    ).select(F.col("query_id"), F.col("item_id").alias("cell"))
-    probe_rows = qcells.collect()
-    probed = sorted({r.cell for r in probe_rows})
-    allowed: dict = {}
-    for r in probe_rows:
-        allowed.setdefault(r.query_id, set()).add(r.cell)
-
-    qrows = queries.select(
-        F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
-    ).collect()
-    qids = np.array([r._qid for r in qrows])
-    Q = np.array([r._qv for r in qrows], dtype=np.float64)
-    luts = np.empty((len(qids), m, kcent), dtype=np.float64)
-    for s in range(m):
-        qsub = Q[:, s * dsub : (s + 1) * dsub]
-        luts[:, s, :] = ((qsub[:, None, :] - codebooks[s][None, :, :]) ** 2).sum(
-            axis=2
-        )
-    b_luts = spark.sparkContext.broadcast(luts)
-    b_qids = spark.sparkContext.broadcast(qids)
-    b_allowed = spark.sparkContext.broadcast(
-        {q: np.array(sorted(cs)) for q, cs in allowed.items()}
-    )
-
-    codes = read_layout(spark, codes_path).filter(F.col("cell").isin(probed))
-    if predicate is not None:
-        # survivors-only ADC: eligibility lands in the JVM scan (pushed
-        # next to the partition filter), so ineligible rows never reach
-        # the Python kernel
-        codes = codes.filter(predicate)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        L, Qi, allow = b_luts.value, b_qids.value, b_allowed.value
-        sub_idx = np.arange(m)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            ids = pdf["item_id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            D = L[:, sub_idx, C].sum(axis=2)  # (nq, n)
-            out_q, out_i, out_d = [], [], []
-            for qi, qid in enumerate(Qi):
-                mask = np.isin(cells, allow.get(qid, np.empty(0)))
-                if not mask.any():
-                    continue
-                d = D[qi][mask]
-                idm = ids[mask]
-                kk = min(shortlist, len(d))
-                part = np.argpartition(d, kk - 1)[:kk] if kk < len(d) else np.arange(len(d))
-                out_q.append(np.full(len(part), qid))
-                out_i.append(idm[part])
-                out_d.append(np.sqrt(d[part]))
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "item_id": np.concatenate(out_i),
-                    "adc_dist": np.concatenate(out_d),
-                }
-            )
-
-    qid_t = dict(queries.dtypes)[query_id]
-    iid_t = dict(codes.dtypes)["item_id"]
-    partial = codes.mapInPandas(
-        scan, schema=f"query_id {qid_t}, item_id {iid_t}, adc_dist double"
-    )
-    wsl = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("item_id"))
-    cand = (
-        partial.withColumn("_rn", F.row_number().over(wsl))
-        .filter(F.col("_rn") <= shortlist)
-        .select("query_id", "item_id")
-    )
-
-    vecs = (
-        read_layout(spark, corpus_path)
-        .filter(F.col("cell").isin(probed))
-        .select(F.col(item_id).alias("item_id"), F.col(item_vec).alias("_cvec"))
-    )
-    if predicate is not None:
-        vecs = vecs.filter(predicate)
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")
-    )
-    scored = (
-        # shortlist candidates are serving-bounded (queries x shortlist);
-        # broadcast hint gated on corpus size (guide §3.1/§8 at scale,
-        # fixed driver roundtrip below it — VERDICT r13 #1)
-        broadcast_if_large(cand, n_corpus).join(vecs, "item_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id", "item_id", l2_dist(F.col("_qvec"), F.col("_cvec")).alias("dist")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "item_id", "dist")
+    return ivf_shortlist_search(
+        queries, spark, codes_path, corpus_path, centroids,
+        pq_scorer(codebooks), k, n_probe, shortlist, query_id, query_vec,
+        item_id, item_vec, predicate=predicate, n_corpus=n_corpus,
     )

@@ -381,6 +381,28 @@ def _calib_gt(
     return qs, gt.select("query_id", "item_id")
 
 
+def scorer_shortlist_curve(
+    corpus: DataFrame,
+    encoded: DataFrame,
+    scorer,
+    k: int = 10,
+    n_sample: int = DEFAULT_N_SAMPLE,
+    grid: tuple[int, ...] = SHORTLIST_GRID,
+    item_id: str = "item_id",
+    item_vec: str = "embedding",
+) -> dict[int, float]:
+    """Measured recall-vs-shortlist of a flat code family: the family's
+    own serve-path scan (an operators/quantized.py Scorer) ranks the
+    persisted codes, truncated at max(grid) + 1 (one spare rank for the
+    dropped self hit), vs the exact-kNN ground truth — one pass."""
+    qs, gt = _calib_gt(corpus, k, n_sample, item_id, item_vec)
+    scored = scorer.score(qs, encoded, limit=max(grid) + 1).select(
+        "query_id", "item_id",
+        F.col(scorer.adist).cast("double").alias("adist"),
+    )
+    return shortlist_recall_curve(scored, gt, grid)
+
+
 def bq_shortlist_curve(
     corpus: DataFrame,
     encoded: DataFrame,
@@ -392,26 +414,13 @@ def bq_shortlist_curve(
     item_id: str = "item_id",
     item_vec: str = "embedding",
 ) -> dict[int, float]:
-    """Measured recall-vs-shortlist of the flat BQ path: Hamming ranks of
-    the persisted codes vs the exact-kNN ground truth, one pass."""
-    from .bq import bq_encode, hamming
+    """Measured recall-vs-shortlist of the flat BQ path (Hamming ranks)."""
+    from .bq import bq_scorer
 
-    qs, gt = _calib_gt(corpus, k, n_sample, item_id, item_vec)
-    qcodes = bq_encode(
-        qs, sums, n, item_id="query_id", item_vec="query_vec"
-    ).select(
-        F.col("item_id").alias("query_id"),
-        F.col("code_lo").alias("q_lo"),
-        F.col("code_hi").alias("q_hi"),
+    return scorer_shortlist_curve(
+        corpus, encoded, bq_scorer(sums, n), k, n_sample, grid, item_id,
+        item_vec,
     )
-    scored = encoded.crossJoin(F.broadcast(qcodes)).select(
-        "query_id",
-        "item_id",
-        hamming(
-            F.col("q_lo"), F.col("q_hi"), F.col("code_lo"), F.col("code_hi")
-        ).cast("double").alias("adist"),
-    )
-    return shortlist_recall_curve(scored, gt, grid)
 
 
 def pq_shortlist_curve(
@@ -424,15 +433,13 @@ def pq_shortlist_curve(
     item_id: str = "item_id",
     item_vec: str = "embedding",
 ) -> dict[int, float]:
-    """Measured recall-vs-shortlist of the flat PQ path: ADC ranks (the
-    pq_search scan itself, truncated at max(grid)) vs exact ground truth."""
-    from .pq import pq_search
+    """Measured recall-vs-shortlist of the flat PQ path (ADC ranks)."""
+    from .pq import pq_scorer
 
-    qs, gt = _calib_gt(corpus, k, n_sample, item_id, item_vec)
-    ranked = pq_search(qs, encoded, codebooks, k=max(grid) + 1).select(
-        "query_id", "item_id", F.col("rank").alias("_rn")
+    return scorer_shortlist_curve(
+        corpus, encoded, pq_scorer(codebooks), k, n_sample, grid, item_id,
+        item_vec,
     )
-    return _curve_from_ranked(_drop_self_reranked(ranked), gt, grid)
 
 
 def sq_shortlist_curve(
@@ -446,27 +453,13 @@ def sq_shortlist_curve(
     item_id: str = "item_id",
     item_vec: str = "embedding",
 ) -> dict[int, float]:
-    """Measured recall-vs-shortlist of the flat SQ path (sq_search ranks
-    vs exact ground truth)."""
-    from .sq import sq_search
+    """Measured recall-vs-shortlist of the flat SQ path (decoded-int8
+    ranks)."""
+    from .sq import sq_scorer
 
-    qs, gt = _calib_gt(corpus, k, n_sample, item_id, item_vec)
-    ranked = sq_search(qs, encoded, vmin, scale, k=max(grid) + 1).select(
-        "query_id", "item_id", F.col("rank").alias("_rn")
-    )
-    return _curve_from_ranked(_drop_self_reranked(ranked), gt, grid)
-
-
-def _drop_self_reranked(ranked: DataFrame) -> DataFrame:
-    """CALIB v3 result-side self-pair exclusion for PRE-RANKED frames
-    (query_id, item_id, _rn): drop the query's own corpus row and
-    re-compact the ranks so every item below the self hit moves up one —
-    the ranking a fresh (non-member) query would see. Callers fetch one
-    extra rank (max(grid)+1) so the tail rank survives the drop."""
-    w = Window.partitionBy("query_id").orderBy("_rn")
-    return (
-        ranked.filter(F.col("item_id") != F.col("query_id"))
-        .withColumn("_rn", F.row_number().over(w))
+    return scorer_shortlist_curve(
+        corpus, encoded, sq_scorer(vmin, scale), k, n_sample, grid, item_id,
+        item_vec,
     )
 
 
@@ -506,6 +499,21 @@ def _joint_curve(
         "query_id", "item_id", "adist"
     )
     return shortlist_recall_curve(probed, gt, grid)
+
+
+def composed_scored(spark: SparkSession, codes_path: str, scorer):
+    """``scored_fn`` for :func:`composed_serving_budget`: the family's
+    serve-path scan (an operators/quantized.py Scorer) over the persisted
+    cell-partitioned codes of the given cells, cell carried along."""
+
+    def scored(qs: DataFrame, cells) -> DataFrame:
+        codes = read_layout(spark, codes_path).filter(F.col("cell").isin(cells))
+        return scorer.score(qs, codes, keep=("cell",)).select(
+            "query_id", "item_id", "cell",
+            F.col(scorer.adist).cast("double").alias("adist"),
+        )
+
+    return scored
 
 
 def composed_serving_budget(

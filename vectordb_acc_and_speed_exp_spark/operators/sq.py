@@ -24,14 +24,19 @@ Spark-first shape:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io.relcache import read_layout
+from .quantized import (
+    Scorer,
+    approx_topk,
+    ivf_codes_upsert,
+    ivf_shortlist_search,
+    kernel_scorer,
+    shortlist_search,
+    write_ivf_codes,
+)
 
 
 def sq_train(
@@ -157,308 +162,99 @@ def sq_recon_qerr(vec_col, vmin: np.ndarray, scale: np.ndarray):
     return F.sqrt(F.aggregate(errs, F.lit(0.0), lambda a, e: a + e * e))
 
 
+def sq_scorer(vmin: np.ndarray, scale: np.ndarray) -> Scorer:
+    """Asymmetric SQ scan: codes decode to x̂ = vmin + code·scale inside
+    the kernel, distances via one gemm per Arrow batch (||q||² − 2q·x̂ +
+    ||x̂||², clipped at 0). The query stays float."""
+
+    def sqdist(st, codes):
+        q, qsq = st
+        X = vmin[None, :] + np.array(codes.tolist(), dtype=np.float64) * scale[None, :]
+        D = qsq - 2.0 * (q @ X.T) + (X * X).sum(axis=1)[None, :]
+        return np.maximum(D, 0.0)
+
+    return kernel_scorer(
+        "sq_dist", lambda Q: (Q, (Q * Q).sum(axis=1)[:, None]), sqdist
+    )
+
+
 def sq_search(
-    queries: DataFrame,
-    encoded: DataFrame,
-    vmin: np.ndarray,
-    scale: np.ndarray,
-    k: int = 10,
-    query_id: str = "query_id",
+    queries: DataFrame, encoded: DataFrame, vmin: np.ndarray,
+    scale: np.ndarray, k: int = 10, query_id: str = "query_id",
     query_vec: str = "query_vec",
 ) -> DataFrame:
-    """Asymmetric SQ scan: decode codes to x̂ = vmin + code·scale inside the
-    kernel, distances via one gemm per Arrow batch (||q||² − 2q·x̂ + ||x̂||²),
-    per-batch partial top-k, global window merge. Returns (query_id, rank,
-    item_id, sq_dist)."""
-    spark = queries.sparkSession
-    qrows = queries.select(
-        F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
-    ).collect()
-    qids = np.array([r._qid for r in qrows])
-    Q = np.array([r._qv for r in qrows], dtype=np.float64)
-    b = spark.sparkContext.broadcast((qids, Q, vmin, scale))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, q, mn, sc = b.value
-        qsq = (q * q).sum(axis=1)[:, None]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(pdf["codes"].tolist(), dtype=np.float64)
-            X = mn[None, :] + C * sc[None, :]  # decode (n, dim)
-            ids = pdf["item_id"].to_numpy()
-            D = qsq - 2.0 * (q @ X.T) + (X * X).sum(axis=1)[None, :]
-            np.maximum(D, 0.0, out=D)
-            kk = min(k, D.shape[1])
-            part = np.argpartition(D, kk - 1, axis=1)[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qi, kk),
-                    "item_id": ids[part].ravel(),
-                    "sq_dist": np.sqrt(np.take_along_axis(D, part, axis=1)).ravel(),
-                }
-            )
-
-    qid_t = dict(queries.dtypes)[query_id]
-    iid_t = dict(encoded.dtypes)["item_id"]
-    partial = encoded.mapInPandas(
-        scan, schema=f"query_id {qid_t}, item_id {iid_t}, sq_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("sq_dist"), F.asc("item_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "item_id", "sq_dist")
+    """The approximate SQ ranking alone: (query_id, rank, item_id,
+    sq_dist)."""
+    return approx_topk(
+        queries, encoded, sq_scorer(vmin, scale), k, query_id, query_vec
     )
 
 
 def sq_search_rerank(
-    queries: DataFrame,
-    corpus: DataFrame,
-    encoded: DataFrame,
-    vmin: np.ndarray,
-    scale: np.ndarray,
-    k: int = 10,
-    shortlist: int = 100,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
+    queries: DataFrame, corpus: DataFrame, encoded: DataFrame,
+    vmin: np.ndarray, scale: np.ndarray, k: int = 10, shortlist: int = 100,
+    query_id: str = "query_id", query_vec: str = "query_vec",
+    item_id: str = "item_id", item_vec: str = "embedding",
     n_corpus: int | None = None,
 ) -> DataFrame:
     """Compressed scan → exact re-rank of the short-list (the production
-    pattern; same contract as pq_search_rerank). ``n_corpus`` (when the
-    caller knows the corpus size, e.g. from a sidecar) gates the re-rank
-    broadcast hint — see operators/hints.py."""
-    from ..functions.vector import l2_dist
-    from .hints import broadcast_if_large
+    pattern; operators/quantized.py). ``n_corpus`` (when the caller knows
+    the corpus size, e.g. from a sidecar) gates the re-rank broadcast
+    hint — see operators/hints.py."""
+    return shortlist_search(
+        queries, encoded, corpus, sq_scorer(vmin, scale), k, shortlist,
+        query_id, query_vec, item_id, item_vec, n_corpus=n_corpus,
+    )
 
-    cand = sq_search(
-        queries, encoded, vmin, scale, k=shortlist,
-        query_id=query_id, query_vec=query_vec,
-    ).select("query_id", "item_id")
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")
-    )
-    vecs = corpus.select(
-        F.col(item_id).alias("item_id"), F.col(item_vec).alias("_cvec")
-    )
-    scored = (
-        # shortlist candidates are serving-bounded (queries x shortlist);
-        # at large corpus sizes broadcast them so the exact re-rank is a
-        # BroadcastHashJoin over the vector scan instead of a
-        # SortMergeJoin that shuffles every corpus vector to attach a
-        # tiny id list (guide §3.1/§8); at small sizes the planner
-        # already broadcasts and forcing the computed subtree through a
-        # driver collect costs a fixed roundtrip (VERDICT r13 #1)
-        broadcast_if_large(cand, n_corpus).join(vecs, "item_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "item_id",
-            l2_dist(F.col("_qvec"), F.col("_cvec")).alias("dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "item_id", "dist")
+
+def _ivf_encoder(vmin, scale, item_id, item_vec):
+    return lambda df: sq_encode(
+        df, vmin, scale, item_id=item_id, item_vec=item_vec,
+        passthrough=("cell",),
     )
 
 
 def write_ivfsq_codes(
-    corpus_assigned: DataFrame,
-    vmin: np.ndarray,
-    scale: np.ndarray,
-    path: str,
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
+    corpus_assigned: DataFrame, vmin: np.ndarray, scale: np.ndarray,
+    path: str, item_id: str = "item_id", item_vec: str = "embedding",
 ) -> None:
     """Encode an IVF-assigned corpus (must carry ``cell``) to int8 codes
     and persist them partitioned by cell — the IVF-SQ layout (FAISS
     IVFScalarQuantizer): directory pruning from the coarse quantizer, 4×
-    fewer bytes inside each directory, near-lossless fidelity (EP5). The
-    encode is the same pure-HOF projection; ``cell`` rides through as a
-    passthrough column."""
-    sq_encode(
-        corpus_assigned, vmin, scale, item_id=item_id, item_vec=item_vec,
-        passthrough=("cell",),
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
+    fewer bytes inside each directory, near-lossless fidelity (EP5)."""
+    write_ivf_codes(
+        _ivf_encoder(vmin, scale, item_id, item_vec)(corpus_assigned), path
+    )
 
 
 def ivfsq_codes_upsert(
-    spark,
-    corpus_path: str,
-    codes_path: str,
-    vmin: np.ndarray,
-    scale: np.ndarray,
-    cells: list[int],
-    item_id: str = "item_id",
+    spark, corpus_path: str, codes_path: str, vmin: np.ndarray,
+    scale: np.ndarray, cells: list[int], item_id: str = "item_id",
     item_vec: str = "embedding",
 ) -> None:
-    """Refresh the derived IVF-SQ code table for the given cells after the
-    base IVF corpus was upserted: re-encode exactly those cells from the
-    post-upsert corpus (partition-pruned scan) with the FROZEN affine
-    params and dynamic-partition-overwrite the matching code directories.
-
-    Keeps the codes layout a pure function of the corpus layout — the
-    exactly-once property of ivf_index_upsert extends to the compressed
-    index, and a replayed batch converges to the same code bytes. Params
-    intentionally do not move (re-training = offline rebuild, same
-    contract as the centroids). At 100 TB: cost is f/n of a full
-    re-encode for f touched cells."""
-    if not cells:
-        return
-    from .ann import drop_empty_cell_dirs
-
-    fresh = read_layout(spark, corpus_path).filter(F.col("cell").isin(list(cells)))
-    (
-        sq_encode(
-            fresh, vmin, scale, item_id=item_id, item_vec=item_vec,
-            passthrough=("cell",),
-        )
-        .repartition("cell")
-        # post-rename name (sq_encode emits "item_id"); see the identical
-        # note in operators/bq.py::ivfbq_codes_upsert
-        .sortWithinPartitions("item_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(codes_path)
+    """Re-encode the given cells of the IVF-SQ code table from the
+    post-upsert corpus with the FROZEN affine params (the lockstep
+    contract of operators/quantized.py::ivf_codes_upsert)."""
+    ivf_codes_upsert(
+        spark, corpus_path, codes_path,
+        _ivf_encoder(vmin, scale, item_id, item_vec), cells,
     )
-    present = {r.cell for r in fresh.select("cell").distinct().collect()}
-    drop_empty_cell_dirs(codes_path, set(cells) - present)
 
 
 def ivfsq_search(
-    queries: DataFrame,
-    spark,
-    codes_path: str,
-    corpus_path: str,
-    centroids: DataFrame,
-    vmin: np.ndarray,
-    scale: np.ndarray,
-    k: int = 10,
-    n_probe: int = 4,
-    shortlist: int = 100,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
-    n_corpus: int | None = None,
+    queries: DataFrame, spark, codes_path: str, corpus_path: str,
+    centroids: DataFrame, vmin: np.ndarray, scale: np.ndarray, k: int = 10,
+    n_probe: int = 4, shortlist: int = 100, query_id: str = "query_id",
+    query_vec: str = "query_vec", item_id: str = "item_id",
+    item_vec: str = "embedding", n_corpus: int | None = None,
 ) -> DataFrame:
-    """Composed IVF-SQ search (the EP5 'hot data' recipe):
-
-    1. coarse probe: n_probe nearest cells per query → ``cell IN (...)``
-       partition filter on the codes scan AND the re-rank vector fetch;
-    2. asymmetric int8 scan of only the probed cells' codes (decode inside
-       the gemm kernel), per-query cell masks keep strict IVF semantics;
-    3. exact re-rank of the short-list against the same pruned
-       directories.
-
-    Full probe with shortlist ≥ corpus is exact (tested — the same
-    metamorphic identity as IVF-PQ). ``n_corpus`` gates the re-rank
-    broadcast hint — see operators/hints.py."""
-    from ..functions.vector import l2_dist
-    from .hints import broadcast_if_large
-    from .knn import exact_knn
-
-    qcells = exact_knn(
-        queries, centroids, k=n_probe,
-        query_id=query_id, query_vec=query_vec,
-        item_id="cell", item_vec="centroid",
-    ).select(F.col("query_id"), F.col("item_id").alias("cell"))
-    probe_rows = qcells.collect()
-    probed = sorted({r.cell for r in probe_rows})
-    allowed: dict = {}
-    for r in probe_rows:
-        allowed.setdefault(r.query_id, set()).add(r.cell)
-
-    qrows = queries.select(
-        F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
-    ).collect()
-    qids = np.array([r._qid for r in qrows])
-    Q = np.array([r._qv for r in qrows], dtype=np.float64)
-    b = spark.sparkContext.broadcast(
-        (qids, Q, vmin, scale, {q: np.array(sorted(cs)) for q, cs in allowed.items()})
-    )
-
-    codes = read_layout(spark, codes_path).filter(F.col("cell").isin(probed))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, q, mn, sc, allow = b.value
-        qsq = (q * q).sum(axis=1)[:, None]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(pdf["codes"].tolist(), dtype=np.float64)
-            X = mn[None, :] + C * sc[None, :]
-            ids = pdf["item_id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            D = qsq - 2.0 * (q @ X.T) + (X * X).sum(axis=1)[None, :]
-            np.maximum(D, 0.0, out=D)
-            out_q, out_i, out_d = [], [], []
-            for idx, qid in enumerate(qi):
-                mask = np.isin(cells, allow.get(qid, np.empty(0)))
-                if not mask.any():
-                    continue
-                d = D[idx][mask]
-                idm = ids[mask]
-                kk = min(shortlist, len(d))
-                part = (
-                    np.argpartition(d, kk - 1)[:kk]
-                    if kk < len(d)
-                    else np.arange(len(d))
-                )
-                out_q.append(np.full(len(part), qid))
-                out_i.append(idm[part])
-                out_d.append(np.sqrt(d[part]))
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "item_id": np.concatenate(out_i),
-                    "sq_dist": np.concatenate(out_d),
-                }
-            )
-
-    qid_t = dict(queries.dtypes)[query_id]
-    iid_t = dict(codes.dtypes)["item_id"]
-    partial = codes.mapInPandas(
-        scan, schema=f"query_id {qid_t}, item_id {iid_t}, sq_dist double"
-    )
-    wsl = Window.partitionBy("query_id").orderBy(
-        F.asc("sq_dist"), F.asc("item_id")
-    )
-    cand = (
-        partial.withColumn("_rn", F.row_number().over(wsl))
-        .filter(F.col("_rn") <= shortlist)
-        .select("query_id", "item_id")
-    )
-    vecs = (
-        read_layout(spark, corpus_path)
-        .filter(F.col("cell").isin(probed))
-        .select(F.col(item_id).alias("item_id"), F.col(item_vec).alias("_cvec"))
-    )
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qvec")
-    )
-    scored = (
-        # shortlist candidates are serving-bounded (queries x shortlist);
-        # broadcast hint gated on corpus size (guide §3.1/§8 at scale,
-        # fixed driver roundtrip below it — VERDICT r13 #1)
-        broadcast_if_large(cand, n_corpus).join(vecs, "item_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id", "item_id",
-            l2_dist(F.col("_qvec"), F.col("_cvec")).alias("dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "item_id", "dist")
+    """Composed IVF-SQ search (the EP5 'hot data' recipe): coarse probe →
+    asymmetric int8 scan of only the probed cells' codes → exact re-rank
+    against the same pruned directories. Full probe with shortlist ≥
+    corpus is exact (tested). ``n_corpus`` gates the re-rank broadcast
+    hint — see operators/hints.py."""
+    return ivf_shortlist_search(
+        queries, spark, codes_path, corpus_path, centroids,
+        sq_scorer(vmin, scale), k, n_probe, shortlist, query_id, query_vec,
+        item_id, item_vec, n_corpus=n_corpus,
     )

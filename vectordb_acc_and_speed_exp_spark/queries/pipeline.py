@@ -312,6 +312,7 @@ def _composed_serving(
     the probe curve and the joint shortlist curve are re-measured at
     the requested k."""
     from ..operators.probetune import (
+        composed_scored,
         composed_serving_budget,
         probe_recall_curve,
     )
@@ -325,62 +326,26 @@ def _composed_serving(
             probe_curve = probe_recall_curve(
                 spark, corpus_path, cents, k=k, item_id="vec_id"
             )
+        # the registry builders differ per family; the calibration scan
+        # is each family's serve-path scorer (operators/quantized.py)
         if fam == "ivfpq":
-            from ..operators.pq import pq_search
+            from ..operators.pq import pq_scorer
 
             codes_path, _, _, books = _get_or_build_ivfpq(spark, sf_dir)
-
-            def scored(qs, cells):
-                codes = read_layout(spark, codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                ranked = pq_search(qs, codes, books, k=1 << 30).select(
-                    "query_id", "item_id", F.col("adc_dist").alias("adist")
-                )
-                return ranked.join(codes.select("item_id", "cell"), "item_id")
-
+            scorer = pq_scorer(books)
         elif fam == "ivfsq":
-            from ..operators.sq import sq_search
+            from ..operators.sq import sq_scorer
 
             codes_path, _, _, vmin, scale = _get_or_build_ivfsq(spark, sf_dir)
-
-            def scored(qs, cells):
-                codes = read_layout(spark, codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                ranked = sq_search(qs, codes, vmin, scale, k=1 << 30).select(
-                    "query_id", "item_id", F.col("sq_dist").alias("adist")
-                )
-                return ranked.join(codes.select("item_id", "cell"), "item_id")
-
+            scorer = sq_scorer(vmin, scale)
         else:
-            from ..operators.bq import bq_encode, hamming
+            from ..operators.bq import bq_scorer
 
             codes_path, _, _, sums, bn = _get_or_build_ivfbq(spark, sf_dir)
-
-            def scored(qs, cells):
-                codes = read_layout(spark, codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                qcodes = bq_encode(
-                    qs, sums, bn, item_id="query_id", item_vec="query_vec"
-                ).select(
-                    F.col("item_id").alias("query_id"),
-                    F.col("code_lo").alias("q_lo"),
-                    F.col("code_hi").alias("q_hi"),
-                )
-                return codes.crossJoin(F.broadcast(qcodes)).select(
-                    "query_id",
-                    "item_id",
-                    "cell",
-                    hamming(
-                        F.col("q_lo"), F.col("q_hi"),
-                        F.col("code_lo"), F.col("code_hi"),
-                    ).cast("double").alias("adist"),
-                )
-
+            scorer = bq_scorer(sums, bn)
         b = composed_serving_budget(
-            spark, corpus_path, cents, scored,
+            spark, corpus_path, cents,
+            composed_scored(spark, codes_path, scorer),
             k=k, item_id="vec_id", probe_curve=probe_curve,
         )
         # a chosen shortlist below k cannot even hold the answer set

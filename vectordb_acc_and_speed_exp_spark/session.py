@@ -19,7 +19,39 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on
+    (what ``nproc`` reports — the affinity mask, not the host total)."""
+    env = int(os.environ.get("SPARK_GRAFT_CPUS", "0"))
+    if env:
+        return env
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 4
+
+
+# local mode is ONE JVM for driver + executors, so its heap is sized for
+# both: this share of the host's MemTotal leaves the rest to Python
+# workers (Arrow batches, NumPy kernels) and the OS
+DRIVER_MEMORY_FRACTION = 0.6
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+    DRIVER_MEMORY_FRACTION of MemTotal from ``meminfo`` in whole MiB
+    (e.g. "9216m" on a 15 GiB host), else "16g" where the host's memory
+    cannot be read."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{int(kib * DRIVER_MEMORY_FRACTION) // 1024}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
 
 
 def get_spark(
@@ -52,10 +84,7 @@ def get_spark(
         # would break the later scan.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode = ONE JVM for driver + executors: size the heap for
-        # both (the box has 128 GiB; 16g covers the full bench suite's
-        # transient state with headroom)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     if "SPARK_MASTER" not in os.environ and "MASTER" not in os.environ:
