@@ -311,10 +311,16 @@ class VectorStore:
         """Read a collection, optionally narrowed the ChromaDB way:
         ``ids`` (id membership), ``where`` (SQL predicate over the
         collection's columns), ``limit``. Filters are plain Catalyst
-        predicates, so they push into the parquet scan."""
+        predicates, so they push into the parquet scan. The relation is
+        the session-cached ``read_layout`` one: every write to the
+        collection changes its layout signature, so a read after any
+        write plans over the new files, and a read over unchanged files
+        pays no schema-inference job."""
+        from .io.relcache import read_layout
+
         p = self._path(name)
         self._heal_on_read(p)
-        df = self.spark.read.parquet(p)
+        df = read_layout(self.spark, p)
         if ids is not None:
             df = df.filter(F.col("id").isin(list(ids)))
         if where is not None:
@@ -2458,13 +2464,13 @@ class VectorStore:
             n_probe, shortlist = self._resolve_composed(
                 name, mode, n_probe, shortlist, k=k
             )
-            # ivfbq keeps its scorer's hamming column (its historical
-            # output); the flat modes return the four standard columns
+            # the bq scorer's hamming column stays internal: query()
+            # returns the four documented columns on every mode
             return ivf_shortlist_search(
                 qdf, self.spark, codes, corpus_path, cents, scorer, k=k,
                 n_probe=n_probe, shortlist=shortlist, item_id="id",
                 n_corpus=n_corpus,
-            )
+            ).select("query_id", "rank", "item_id", "dist")
         encoded = self.spark.read.parquet(codes).drop("_qerr")
         if where is not None:
             encoded = encoded.join(

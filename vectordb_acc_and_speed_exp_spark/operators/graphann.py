@@ -11,10 +11,32 @@ would have to fit one machine. The distributed form is scatter-gather:
 - **build** one navigable-small-world graph PER SHARD with
   ``applyInPandas`` (each group builds independently, in parallel, with
   numpy — no driver involvement, no cross-shard edges);
-- **search** every shard's graph with a deterministic beam search (again
-  ``applyInPandas``, queries broadcast-joined to every shard), each shard
-  returning its local top-k;
-- **merge** with one global window top-k over P*k tiny rows.
+- **search** a WRITTEN index (``graph_ann_pruned``,
+  ``graph_ann_cell_probed``) without reading it through Spark: the driver
+  lists the shard part files (path, size, mtime_ns — O(files) stats, the
+  ``relcache.layout_sig`` discipline; the cell-probed path keeps only the
+  probed shards) and ships that list, plus the query batch, to ONE
+  ``mapInPandas`` task. The Python worker keeps parsed shards (vectors,
+  ids, adjacency) resident in a byte-bounded LRU keyed by file identity
+  and reads a shard with pyarrow only on a miss. Part files are
+  immutable and every write (upsert, rebuild) lands new UUID-named
+  files, so a key hit is the same bytes. No index row crosses Spark, no
+  shuffle runs, and the query pays one Python task;
+- **search** an in-memory index DataFrame (``graph_ann``) with the same
+  per-shard beam-search function, as ``applyInPandas`` per shard;
+- **merge** with one global (dist, item_id) window top-k over P*k tiny
+  rows (no shuffle on the one-task path: its output is one partition).
+
+Why one task: a Python task has a fixed cost. On Python 3.11 each task's
+``setup_spark_files`` calls ``importlib.invalidate_caches()``, and each of
+the worker's 16 zip importers re-reads ``pyspark.zip``'s directory: 170-275
+ms of the ~300 ms of worker CPU a no-op ``mapInPandas`` task costs (4-core
+VM, Spark 4.1.2 ``local[4]``, workers reused). Measured there at 4,000 × 64
+in 8 shards, warm: the shards packed into 4 tasks cost 1,283 ms of worker
+CPU per query, in one task 285-317 ms, while the beam searches over all 8
+shards take ~14 ms and a cache miss re-parses the whole index in ~60 ms.
+So the shards go into the fewest tasks — one — until a batch's search
+time outweighs a task's fixed cost.
 
 Per-query work is P * O(ef * M * log(n/P)) distance evaluations instead
 of O(n): the graph prunes within a shard the way HNSW prunes globally,
@@ -29,12 +51,16 @@ flat structure keeps the build deterministic and the adjacency a plain
 
 Determinism: insertion in ascending id order, fixed entry point (first
 node), float64 distances with id tie-breaks — same corpus + params =>
-bit-identical graph and results on any partitioning.
+bit-identical graph and results on any partitioning, and on either
+search path.
 """
 
 from __future__ import annotations
 
 import heapq
+import os
+import sys
+from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -170,21 +196,88 @@ def _build_sharded(
 def _collect_queries(
     queries: "DataFrame", query_id: str, query_vec: str
 ) -> list[tuple]:
-    """Collect the query batch for broadcast, guarded byte-true the same
-    way simjoin guards its corpus collect: the admissible batch size
-    depends on dim, not just rows. Past the cap, split the query batch —
+    """Collect the query batch for shipping to the search task, guarded
+    byte-true the same way simjoin guards its corpus collect: the
+    admissible batch size depends on dim, not just rows. One bounded
+    action after a one-row probe for dim — ``first()`` + ``limit(cap_rows
+    + 1).collect()`` — so the driver never holds more than the cap plus
+    one row, and a driver-local (VALUES) batch runs no Spark job at all
+    (a ``count()`` there costs two). Past the cap, split the query batch —
     the corpus side never reaches the driver in any graph path."""
     from .simjoin import DEFAULT_BROADCAST_CAP_BYTES, _check_matrix_bytes
 
     qsel = queries.select(
         F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
     )
-    n_q = qsel.count()
-    dim = len(qsel.select("_qv").first()[0])
-    _check_matrix_bytes(n_q, dim, DEFAULT_BROADCAST_CAP_BYTES, "query")
-    return [
-        (r._qid, np.array(r._qv, dtype=np.float64)) for r in qsel.collect()
-    ]
+    head = qsel.select("_qv").first()
+    if head is None:
+        return []
+    dim = len(head[0])
+    cap_rows = DEFAULT_BROADCAST_CAP_BYTES // (8 * max(dim, 1))
+    rows = qsel.limit(cap_rows + 1).collect()
+    _check_matrix_bytes(len(rows), dim, DEFAULT_BROADCAST_CAP_BYTES, "query")
+    return [(r._qid, np.array(r._qv, dtype=np.float64)) for r in rows]
+
+
+def _shard_graph(
+    ids: np.ndarray, V: np.ndarray, nbr_ids: np.ndarray, nbr_lens: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, list[np.ndarray]]:
+    """One shard's rows (ids, vectors, flattened neighbor ids and per-row
+    neighbor counts, any order) -> (V, ids, adj) in ascending-id order,
+    the node order the shard's graph was built in; adj holds node
+    positions."""
+    order = np.argsort(ids, kind="stable")
+    ids, V = ids[order], V[order]
+    pos = pd.Index(ids).get_indexer(nbr_ids).astype(np.int64, copy=False)
+    if (pos < 0).any():
+        raise ValueError("graph shard has a neighbor id that is not a node")
+    starts = np.concatenate(([0], np.cumsum(nbr_lens)))
+    adj = [pos[starts[r] : starts[r + 1]] for r in order]
+    return V, ids, adj
+
+
+def _beam_searches(shard, V, adj, queries, probe_map, ef):
+    """(qid, found, n_visited) of the beam search of every query that
+    probes ``shard`` (all of them when ``probe_map`` is None)."""
+    if not len(V):
+        return
+    for qid, qv in queries:
+        if probe_map is not None and shard not in probe_map.get(qid, ()):
+            continue
+        found, n_visited = _nsw_search(V, adj, qv, ef, entry=0)
+        yield qid, found, n_visited
+
+
+def _search_shard(shard, V, ids, adj, queries, probe_map, k, ef) -> pd.DataFrame:
+    """(query_id, item_id, dist): each probing query's local top-k in one
+    shard — the one search-and-emit step of both search paths."""
+    out_q, out_i, out_d = [], [], []
+    for qid, found, _ in _beam_searches(shard, V, adj, queries, probe_map, ef):
+        for d, p in found[:k]:
+            out_q.append(qid)
+            out_i.append(ids[p])
+            out_d.append(d)
+    return pd.DataFrame({"query_id": out_q, "item_id": out_i, "dist": out_d})
+
+
+def _pdf_graph(pdf: pd.DataFrame):
+    """``_shard_graph`` of an index DataFrame's Arrow group."""
+    nbrs = pdf["neighbors"]
+    return _shard_graph(
+        pdf["item_id"].to_numpy(),
+        np.array(pdf["embedding"].tolist(), dtype=np.float64),
+        np.concatenate([np.asarray(a) for a in nbrs]),
+        np.array([len(a) for a in nbrs], dtype=np.int64),
+    )
+
+
+def _global_topk(local: DataFrame, k: int) -> DataFrame:
+    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("item_id"))
+    return (
+        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "item_id", "dist")
+    )
 
 
 def graph_ann(
@@ -196,52 +289,28 @@ def graph_ann(
     query_vec: str = "query_vec",
     probe_map: dict | None = None,
 ) -> DataFrame:
-    """Scatter-gather ANN over a graph index: every shard runs the beam
-    search for every query (applyInPandas per shard, queries broadcast),
-    emits its local top-k, and one global window merges P*k rows.
-    With ``probe_map`` ({query_id -> set of shard ids}), each shard only
-    searches the queries that probe it — the gather side of cell-pruned
-    search (graph_ann_cell_probed prunes the scatter side too).
+    """Scatter-gather ANN over an in-memory graph index DataFrame: every
+    shard runs the beam search for every query (applyInPandas per shard,
+    queries shipped in the function), emits its local top-k, and one
+    global window merges P*k rows. With ``probe_map`` ({query_id -> set of
+    shard ids}), each shard only searches the queries that probe it — the
+    gather side of cell-pruned search (graph_ann_cell_probed prunes the
+    scatter side too). A written index is served by graph_ann_pruned
+    instead, which reads no index row through Spark.
     Returns (query_id, rank, item_id, dist)."""
-    spark = queries.sparkSession
-    b_q = spark.sparkContext.broadcast(
-        _collect_queries(queries, query_id, query_vec)
-    )
-    b_pm = spark.sparkContext.broadcast(probe_map)
+    qs = _collect_queries(queries, query_id, query_vec)
     qid_t = dict(queries.dtypes)[query_id]
 
     def search_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("item_id").reset_index(drop=True)
-        V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        ids = pdf["item_id"].to_numpy()
-        pos = {i: p for p, i in enumerate(ids)}
-        adj = [
-            np.array([pos[v] for v in nbrs], dtype=np.int64)
-            for nbrs in pdf["neighbors"]
-        ]
+        V, ids, adj = _pdf_graph(pdf)
         shard = int(pdf["shard"].iloc[0])
-        pm = b_pm.value
-        out_q, out_i, out_d = [], [], []
-        for qid, qv in b_q.value:
-            if pm is not None and shard not in pm.get(qid, ()):
-                continue
-            found, _ = _nsw_search(V, adj, qv, ef_search, entry=0)
-            for d, p in found[:k]:
-                out_q.append(qid)
-                out_i.append(ids[p])
-                out_d.append(d)
-        return pd.DataFrame({"query_id": out_q, "item_id": out_i, "dist": out_d})
+        return _search_shard(shard, V, ids, adj, qs, probe_map, k, ef_search)
 
     iid_t = dict(index.dtypes)["item_id"]
     local = index.groupBy("shard").applyInPandas(
         search_shard, schema=f"query_id {qid_t}, item_id {iid_t}, dist double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("item_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "item_id", "dist")
-    )
+    return _global_topk(local, k)
 
 
 def graph_ann_visited_stats(
@@ -257,30 +326,18 @@ def graph_ann_visited_stats(
     LSH scanned fraction (sum(n_visited)/sum(shard_size) per query).
     With ``probe_map``, stats cover only the probed (query, shard) pairs.
     Runs the same deterministic search, instrumented."""
-    spark = queries.sparkSession
-    b_q = spark.sparkContext.broadcast(
-        _collect_queries(queries, query_id, query_vec)
-    )
-    b_pm = spark.sparkContext.broadcast(probe_map)
+    qs = _collect_queries(queries, query_id, query_vec)
     qid_t = dict(queries.dtypes)[query_id]
 
     def stat_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("item_id").reset_index(drop=True)
-        V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        ids = pdf["item_id"].to_numpy()
-        pos = {i: p for p, i in enumerate(ids)}
-        adj = [
-            np.array([pos[v] for v in nbrs], dtype=np.int64)
-            for nbrs in pdf["neighbors"]
-        ]
+        V, ids, adj = _pdf_graph(pdf)
         shard = int(pdf["shard"].iloc[0])
-        pm = b_pm.value
-        rows = []
-        for qid, qv in b_q.value:
-            if pm is not None and shard not in pm.get(qid, ()):
-                continue
-            _, n_visited = _nsw_search(V, adj, qv, ef_search, 0)
-            rows.append((qid, shard, n_visited, len(ids)))
+        rows = [
+            (qid, shard, n_visited, len(ids))
+            for qid, _, n_visited in _beam_searches(
+                shard, V, adj, qs, probe_map, ef_search
+            )
+        ]
         return pd.DataFrame(
             rows, columns=["query_id", "shard", "n_visited", "shard_size"]
         )
@@ -290,6 +347,131 @@ def graph_ann_visited_stats(
         schema=f"query_id {qid_t}, shard bigint, n_visited bigint, "
         "shard_size bigint",
     )
+
+
+# -- resident shards: the written-index search path ---------------------------
+# Byte bound on the parsed shards ONE Python worker keeps resident (vectors,
+# ids, adjacency), enforced before insert by evicting least-recently-used
+# shards; a shard larger than the bound is searched but not kept. Worst case
+# on an executor: this bound × its Python workers (one per concurrently
+# running Python task, at most its task slots). A worker Spark retires
+# (idle, crashed) takes its cache with it; the next task re-reads.
+SHARD_CACHE_BYTES = 256 << 20
+# (path, size, mtime_ns) of each part file of a shard -> (V, ids, adj, bytes)
+_SHARD_CACHE: OrderedDict = OrderedDict()
+
+
+def _shard_files(index_path: str) -> dict[int, tuple]:
+    """{shard -> ((path, size, mtime_ns), ...)} of a written index's part
+    files — one scandir per shard directory and one stat per file,
+    skipping the ``_``/``.``-prefixed names Spark's reader skips."""
+    out: dict[int, list] = {}
+    with os.scandir(index_path) as it:
+        for d in it:
+            if not (d.name.startswith("shard=") and d.is_dir()):
+                continue
+            files = out.setdefault(int(d.name[len("shard=") :]), [])
+            with os.scandir(d.path) as sub:
+                for f in sub:
+                    if f.name.startswith(("_", ".")) or not f.is_file():
+                        continue
+                    st = f.stat()
+                    files.append((f.path, st.st_size, st.st_mtime_ns))
+    return {s: tuple(sorted(f)) for s, f in sorted(out.items()) if f}
+
+
+def _read_shard(paths) -> tuple[np.ndarray, np.ndarray, list[np.ndarray]]:
+    """Parse one shard's part files with pyarrow into (V, ids, adj)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pa.concat_tables(
+        pq.read_table(p, columns=["item_id", "embedding", "neighbors"])
+        for p in paths
+    )
+    emb, nbrs = t.column("embedding"), t.column("neighbors")
+    flat = np.asarray(pc.list_flatten(emb).to_numpy(), dtype=np.float64)
+    return _shard_graph(
+        t.column("item_id").to_numpy(),
+        flat.reshape(t.num_rows, -1),
+        pc.list_flatten(nbrs).to_numpy(zero_copy_only=False),
+        pc.list_value_length(nbrs).to_numpy(zero_copy_only=False),
+    )
+
+
+def _graph_bytes(V, ids, adj) -> int:
+    """Resident bytes of a parsed shard: arrays, the adjacency views'
+    headers, and the id objects when ids are strings."""
+    n = V.nbytes + ids.nbytes + sum(a.nbytes + sys.getsizeof(a) for a in adj)
+    if ids.dtype == object:
+        n += sum(sys.getsizeof(i) for i in ids)
+    return n
+
+
+def _resident_shard(files: tuple):
+    """(V, ids, adj) of the shard whose part files are ``files``: from this
+    worker's cache, else parsed and cached within SHARD_CACHE_BYTES."""
+    hit = _SHARD_CACHE.pop(files, None)
+    if hit is None:
+        V, ids, adj = _read_shard([f[0] for f in files])
+        hit = (V, ids, adj, _graph_bytes(V, ids, adj))
+        if hit[3] > SHARD_CACHE_BYTES:
+            return hit[:3]
+        used = sum(e[3] for e in _SHARD_CACHE.values())
+        while _SHARD_CACHE and used + hit[3] > SHARD_CACHE_BYTES:
+            used -= _SHARD_CACHE.popitem(last=False)[1][3]
+    _SHARD_CACHE[files] = hit
+    return hit[:3]
+
+
+def _graph_ann_files(
+    queries: DataFrame,
+    spark: SparkSession,
+    index_path: str,
+    k: int,
+    ef_search: int,
+    query_id: str,
+    query_vec: str,
+    probe_map: dict | None = None,
+    shards=None,
+) -> DataFrame:
+    """Search a written index's shards (``shards``: those ids only) in one
+    Python task over the driver-listed file list; see the module
+    docstring. Rows equal graph_ann over read_layout(index_path)."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from ..io.local import local_df
+
+    listed = _shard_files(index_path)
+    if listed:
+        import pyarrow.parquet as pq
+
+        first = next(iter(listed.values()))[0][0]
+        iid_t = from_arrow_type(
+            pq.read_schema(first).field("item_id").type
+        ).simpleString()
+    else:
+        iid_t = dict(read_layout(spark, index_path).dtypes)["item_id"]
+    qs = _collect_queries(queries, query_id, query_vec)
+    qid_t = dict(queries.dtypes)[query_id]
+    files = {
+        s: f for s, f in listed.items() if shards is None or s in shards
+    }
+
+    def search(batches):
+        for pdf in batches:
+            for s in pdf["shard"].tolist():
+                V, ids, adj = _resident_shard(files[s])
+                yield _search_shard(s, V, ids, adj, qs, probe_map, k, ef_search)
+
+    shard_list = local_df(spark, [(s,) for s in files], "shard bigint")
+    # coalesce(1): one task (see the module docstring), and a single
+    # output partition, so the window merge below plans no Exchange
+    local = shard_list.coalesce(1).mapInPandas(
+        search, schema=f"query_id {qid_t}, item_id {iid_t}, dist double"
+    )
+    return _global_topk(local, k)
 
 
 def write_graph_index(index: DataFrame, path: str) -> None:
@@ -375,14 +557,10 @@ def graph_ann_pruned(
     query_id: str = "query_id",
     query_vec: str = "query_vec",
 ) -> DataFrame:
-    """Search a written graph index."""
-    return graph_ann(
-        queries,
-        read_layout(spark, index_path),
-        k=k,
-        ef_search=ef_search,
-        query_id=query_id,
-        query_vec=query_vec,
+    """Search a written graph index: resident shards in one Python task,
+    no index row read through Spark (see the module docstring)."""
+    return _graph_ann_files(
+        queries, spark, index_path, k, ef_search, query_id, query_vec
     )
 
 
@@ -428,9 +606,9 @@ def graph_ann_cell_probed(
     """SPANN-style cell-pruned graph search: the index was built with
     shard = IVF cell (build_graph_index(shard_col="cell")), so a query
     needs only its n_probe nearest cells — resolved by a tiny centroid
-    kNN, pushed into the parquet scan as a partition filter (only those
-    shard directories are read), and then each probed shard runs the beam
-    search for exactly the queries that probe it.
+    kNN — so only those shards' files are listed for the search task (the
+    others are never read or kept resident), and each probed shard runs
+    the beam search for exactly the queries that probe it.
 
     This composes the two pruning mechanisms: IVF partition pruning cuts
     WHICH shards are touched (n_probe/n_cells of the data), the graph cuts
@@ -440,14 +618,8 @@ def graph_ann_cell_probed(
     probe_map = query_probe_map(
         queries, centroids, n_probe, query_id=query_id, query_vec=query_vec
     )
-    probed = sorted(set().union(*probe_map.values())) if probe_map else []
-    idx = read_layout(spark, index_path).filter(F.col("shard").isin(probed))
-    return graph_ann(
-        queries,
-        idx,
-        k=k,
-        ef_search=ef_search,
-        query_id=query_id,
-        query_vec=query_vec,
-        probe_map=probe_map,
+    probed = set().union(*probe_map.values()) if probe_map else set()
+    return _graph_ann_files(
+        queries, spark, index_path, k, ef_search, query_id, query_vec,
+        probe_map=probe_map, shards=probed,
     )
