@@ -281,14 +281,14 @@ def test_bq_codes_incremental_on_add_invalidated_on_upsert(
     vs.create_collection("c", docs)
     probe = docs.limit(1).first()
     r1 = vs.query("c", query_texts=[probe.text], k=3, mode="bq").collect()
-    assert os.path.exists(vs._bq_path("c"))  # artifact built
+    assert os.path.exists(vs._qpaths("c", "bq")[0])  # artifact built
     assert r1[0].item_id == probe.id
     extra = documents.limit(40).subtract(documents.limit(30)).selectExpr(
         "cast(doc_id as string) as id", "text"
     )
     vs.add("c", extra)
     # artifact SURVIVED the append and serves the appended rows
-    assert os.path.exists(os.path.join(vs._bq_path("c"), "_meta.json"))
+    assert os.path.exists(os.path.join(vs._qpaths("c", "bq")[0], "_meta.json"))
     new_probe = extra.limit(1).first()
     r2 = vs.query(
         "c", query_texts=[new_probe.text], k=3, mode="bq", shortlist=1000
@@ -299,7 +299,7 @@ def test_bq_codes_incremental_on_add_invalidated_on_upsert(
         "c",
         spark.createDataFrame([(probe.id, "replaced text")], "id string, text string"),
     )
-    assert not os.path.exists(vs._bq_path("c"))
+    assert not os.path.exists(vs._qpaths("c", "bq")[0])
     r3 = vs.query("c", query_texts=["replaced text"], k=3, mode="bq").collect()
     assert r3[0].item_id == probe.id
 
@@ -964,7 +964,7 @@ def test_crashed_codes_compaction_healed_on_read_and_append(
     )
     probe = [[float(x) for x in embeddings.limit(1).first().embedding]]
     assert vs.query("c", query_vecs=probe, k=5, mode="bq").count() == 5
-    codes = os.path.join(vs._bq_path("c"), "codes")
+    codes = os.path.join(vs._qpaths("c", "bq")[0], "codes")
     n_rows = spark.read.parquet(codes).count()
 
     # crash window before a READ: serve must heal and see the full table
@@ -1009,7 +1009,7 @@ def test_defer_maintenance_accrues_debt_and_optimize_clears_it(
              for r in embeddings.limit(1).collect()]
     vs.query("c", query_vecs=probe, k=3, mode="sq", shortlist=20)  # build
     vs._CODES_AUTO_COMPACT_FILES = 3  # fast-forward the threshold
-    codes = os.path.join(vs._sq_path("c"), "codes")
+    codes = os.path.join(vs._qpaths("c", "sq")[0], "codes")
     counts = [vs._codes_file_count(codes)]
     for i in range(4):
         batch = embeddings.filter(

@@ -295,7 +295,7 @@ def test_auto_compaction_bounds_read_amplification(
     assert vs.query("c", query_vecs=probe, k=5, mode="mtlsh").count() == 5
     assert vs.query("c", query_vecs=probe, k=5, mode="bq").count() == 5
     mtp = vs._mtlsh_path("c")
-    bq_codes = os.path.join(vs._bq_path("c"), "codes")
+    bq_codes = os.path.join(vs._qpaths("c", "bq")[0], "codes")
 
     def n_files(d):
         return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))

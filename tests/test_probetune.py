@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from vectordb_acc_and_speed_exp_spark.operators.probetune import (
-    choose_n_probe,
+    choose_budget,
     probe_recall_curve,
     read_probe_curve,
     write_probe_curve,
@@ -61,7 +61,7 @@ def test_curve_predicts_fresh_query_recall(spark, embeddings, ivf):
     gt = exact_knn(qs, embeddings, k=10, item_id="vec_id").select(
         "query_id", "rank", "item_id"
     )
-    p = choose_n_probe(curve, 0.85)
+    p = choose_budget(curve, 0.85, max(curve))
     got = ivf_ann_pruned(
         spark=spark, queries=qs, corpus_path=corpus_path, centroids=cents,
         k=10, n_probe=p, item_id="vec_id",
@@ -72,14 +72,25 @@ def test_curve_predicts_fresh_query_recall(spark, embeddings, ivf):
     assert p <= cents.count()
 
 
-def test_choose_n_probe_semantics():
+def test_choose_budget_semantics():
     curve = {1: 0.3, 2: 0.55, 3: 0.8, 4: 0.97, 5: 1.0, 6: 1.0}
-    assert choose_n_probe(curve, 0.5) == 2
-    assert choose_n_probe(curve, 0.8) == 3
-    assert choose_n_probe(curve, 0.98) == 5
+    assert choose_budget(curve, 0.5, 6) == 2
+    assert choose_budget(curve, 0.8, 6) == 3
+    assert choose_budget(curve, 0.98, 6) == 5
     # sampled 1.0 at p=5 does NOT shortcut the guarantee: full probe
-    assert choose_n_probe(curve, 1.0) == 6
-    assert choose_n_probe(curve, 0.0) == 1
+    assert choose_budget(curve, 1.0, 6) == 6
+    assert choose_budget(curve, 0.0, 6) == 1
+    # a shortlist grid point past the corpus is capped at it, and a
+    # target no grid point meets falls back to the whole corpus
+    grid = {10: 0.5, 100: 0.9, 400: 0.97}
+    assert choose_budget(grid, 0.95, 300) == 300
+    assert choose_budget(grid, 0.9, 300) == 100
+    assert choose_budget(grid, 0.99, 300) == 300
+    # full=None: no finite budget is exact — a miss and target >= 1
+    # give None (the caller reroutes to the exact scan)
+    assert choose_budget(grid, 0.9, None) == 100
+    assert choose_budget(grid, 0.99, None) is None
+    assert choose_budget(grid, 1.0, None) is None
 
 
 def test_curve_sidecar_roundtrip(tmp_path):
@@ -407,10 +418,11 @@ def test_filtered_target_recall_flat_families(spark, embeddings, tmp_path):
     import json
     import os
 
-    for fam, pathfn in (("bq", vs._bq_path), ("pq", vs._pq_path),
-                        ("sq", vs._sq_path)):
+    for fam in ("bq", "pq", "sq"):
         with open(
-            os.path.join(pathfn("c"), "_filtered_shortlist_curve.json")
+            os.path.join(
+                vs._qpaths("c", fam)[0], "_filtered_shortlist_curve.json"
+            )
         ) as fh:
             bins = json.load(fh)["bins"]
         assert set(bins) == {"0.03", "0.10", "0.25", "0.50"}, fam
@@ -574,7 +586,7 @@ def test_graph_curve_can_certify_above_k_minus_1_over_k(
     )
     probe = [[float(x) for x in embeddings.limit(1).first().embedding]]
     vs.query("c", query_vecs=probe, k=10, mode="graph", target_recall=0.95)
-    curve = vs._ensure_graph_ef_curve("c", k=10)
+    curve = vs._curve("c", "graph", k=10)
     assert max(curve.values()) > 0.9, curve
     # and the 0.95 target resolves a finite measured beam
     assert any(r >= 0.95 for r in curve.values())
@@ -721,7 +733,7 @@ def test_tiny_collection_skips_unmeasurable_bins(spark, embeddings, tmp_path):
     )
     bins = vs._ensure_filtered_shortlist_curve("c", "sq", k=10)
     with open(
-        os.path.join(vs._sq_path("c"), "_filtered_shortlist_curve.json")
+        os.path.join(vs._qpaths("c", "sq")[0], "_filtered_shortlist_curve.json")
     ) as fh:
         meta = json.load(fh)
     # at ~100 rows the 0.03 sample (~3 rows) and usually the 0.10 sample
@@ -735,11 +747,11 @@ def test_tiny_collection_skips_unmeasurable_bins(spark, embeddings, tmp_path):
     # a second call serves the sidecar (coverage check passes WITH the
     # skips — no eternal recalibration)
     mtime = os.path.getmtime(
-        os.path.join(vs._sq_path("c"), "_filtered_shortlist_curve.json")
+        os.path.join(vs._qpaths("c", "sq")[0], "_filtered_shortlist_curve.json")
     )
     bins2 = vs._ensure_filtered_shortlist_curve("c", "sq", k=10)
     assert os.path.getmtime(
-        os.path.join(vs._sq_path("c"), "_filtered_shortlist_curve.json")
+        os.path.join(vs._qpaths("c", "sq")[0], "_filtered_shortlist_curve.json")
     ) == mtime
     assert set(bins2) == set(bins)
     # a ~5% filter sits below the smallest MEASURED bin -> tiny survivor

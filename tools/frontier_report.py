@@ -179,7 +179,7 @@ def main() -> int:
         ))
     # plain NSW beam sweep (VERDICT r09 #6 — the 11th family's rows):
     # the ef dial the facade's target_recall= resolves via a measured
-    # ef sweep (api._ensure_graph_ef_curve)
+    # ef sweep (api.VectorStore._curve(name, "graph", k))
     for ef in (16, 32, 48, 96):
         points.append((
             "graph", f"ef={ef}",

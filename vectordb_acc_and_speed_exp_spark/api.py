@@ -58,9 +58,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .io.local import local_df
+from .operators.ann import LSH_N_PLANES
 from .operators.embedding import DEFAULT_DIM, embed_documents
 from .operators.knn import exact_knn
-from .operators.probetune import CALIB_VERSION
+from .operators.probetune import (
+    CALIB_VERSION,
+    DEFAULT_TARGET_RECALL,
+    choose_budget,
+    curve_is_stale,
+)
 
 
 class _Quantizer(NamedTuple):
@@ -89,6 +95,11 @@ class _Quantizer(NamedTuple):
 
 
 _QUANT_FAMILIES = ("bq", "pq", "sq")
+_COMPOSED = tuple(f"ivf{f}" for f in _QUANT_FAMILIES)
+# the modes whose target_recall= budget is one curve lookup, and the
+# budget that guarantees an exact answer (None: no finite budget of the
+# index does, so a miss or a target >= 1 reroutes to the exact scan)
+_FULL_BUDGET = {"lsh": LSH_N_PLANES, "mtlsh": None, "graph": None}
 
 
 @functools.cache
@@ -265,19 +276,13 @@ class VectorStore:
             # function of the corpus, which just changed
             self._drop_lsh_calib(name)
 
-    def _lsh_calib_path(self, name: str, k: int) -> str:
-        """k-keyed lsh bits-curve sidecar, in a PER-COLLECTION
-        subdirectory (ADVICE r11): flat ``name_k{k}.json`` files made
-        exact deletion impossible — ``c_k2.json`` is indistinguishable
-        from collection ``c``'s k=2 curve and collection ``c_k2``'s bare
-        k=10 curve, so invalidating one collection could sweep a
-        sibling's sidecars. A directory per collection makes ownership
-        structural."""
-        return os.path.join(self.root, ".lsh_calib", name, f"k{int(k)}.json")
-
     def _drop_lsh_calib(self, name: str) -> None:
-        # current layout: everything under the collection's own subdir —
-        # exact by construction (ADVICE r11)
+        # current layout: k-keyed ``k{k}.json`` sidecars in a
+        # PER-COLLECTION subdirectory (ADVICE r11) — flat
+        # ``name_k{k}.json`` files made exact deletion impossible
+        # (``c_k2.json`` is indistinguishable from collection ``c``'s
+        # k=2 curve and collection ``c_k2``'s bare k=10 curve), a
+        # directory per collection makes ownership structural
         shutil.rmtree(
             os.path.join(self.root, ".lsh_calib", name), ignore_errors=True
         )
@@ -997,15 +1002,6 @@ class VectorStore:
         os.remove(ip)
 
     # -- compressed code tables (bq / pq / sq, flat and composed) ----------
-    def _bq_path(self, name: str) -> str:
-        return os.path.join(self.root, ".bq_index", name)
-
-    def _pq_path(self, name: str) -> str:
-        return os.path.join(self.root, ".pq_index", name)
-
-    def _sq_path(self, name: str) -> str:
-        return os.path.join(self.root, ".sq_index", name)
-
     def _qpaths(self, name: str, fam: str, ivf: bool = False):
         """(root, meta, codes, npy, drift_root) of a family's code
         artifact. Flat: ``.<fam>_index/<name>/{_meta.json, codes,
@@ -1181,80 +1177,75 @@ class VectorStore:
         stem, ext = os.path.splitext(base)
         return f"{stem}_k{k}{ext}"
 
-    def _ensure_probe_curve(self, name: str, k: int = 10) -> dict:
-        """Measured recall@k-vs-probes curve for the collection's IVF
-        layout (operators/probetune.py), built lazily on the first
-        ``target_recall=`` query and persisted beside the centroids —
-        one sidecar PER REQUESTED k (VERDICT r10 #1: a recall@10 curve
-        certifies nothing about recall@25, since a larger k's ground
-        truth reaches deeper cells).
-        Rebuilt with the artifact (invalidation drops the whole
-        .ivf_index root); between rebuilds TWO triggers refresh it:
-        the drift tracker's quantizer retrain (distribution change), and
-        the size check here — once the collection grows past 2x the
-        calibration size the old curve's recall numbers are no longer
-        evidence, drift or no drift (VERDICT r08 #3: fixed-probe recall
-        decays with corpus size, the reference's own recall-vs-size
-        curve)."""
-        from .operators.probetune import (
-            CURVE_FILE,
-            DEFAULT_N_SAMPLE,
-            curve_is_stale,
-            probe_recall_curve,
-            read_curve_meta,
-            write_probe_curve,
-        )
+    def _curve(self, name: str, mode: str, k: int = 10) -> dict:
+        """Measured recall@k-vs-budget curve of ``mode``, a key of
+        ``_curve_kinds()``: "probe" (IVF probes), "bq"/"pq"/"sq" (flat
+        re-rank shortlists), "lsh" (probe bits), "mtlsh" (bucket budget),
+        "graph" (beam width). Built lazily on first use, persisted beside
+        its artifact, one sidecar PER REQUESTED k (VERDICT r10 #1: a
+        recall@10 curve certifies nothing about recall@25 — a larger k's
+        ground truth reaches deeper cells, ranks and buckets).
+
+        One cycle for every curve: read the sidecar, keep it unless
+        probetune.curve_is_stale (another calibration version, another
+        k, or the collection grown past 2x the calibration size —
+        VERDICT r08 #3: fixed-budget recall decays with corpus size,
+        drift or no drift), else measure and publish. Rebuilds (writes,
+        the drift-triggered retrain) drop the sidecars with their
+        artifact directories; ``_drop_lsh_calib`` drops the
+        artifact-less lsh curve."""
+        from .io.commitproto import publish_marker
+        from .operators.probetune import read_curve_meta
+
+        kind = _curve_kinds()[mode]
+        path = os.path.join(kind.root(self, name), kind.fname(k))
+        n = self._collection_nrows(name)
+        read = path
+        if kind.legacy is not None and not os.path.exists(path):
+            read = kind.legacy(self, name, k) or path
+        meta = read_curve_meta(*os.path.split(read))
+        if not curve_is_stale(meta, n, k=k):
+            return {int(b): float(r) for b, r in meta["curve"].items()}
+        curve = kind.measure(self, name, k)
+        publish_marker(path, {
+            "k": int(k), "calib": CALIB_VERSION, "n_corpus": int(n),
+            **kind.extra,
+            "curve": {str(b): float(r) for b, r in curve.items()},
+        })
+        return curve
+
+    def _choose(
+        self, name: str, mode: str, k: int, target: float, full: int | None
+    ) -> int | None:
+        """probetune.choose_budget over ``mode``'s curve. A target >= 1
+        reads no curve: only ``full`` guarantees an exact answer, so the
+        guaranteed-exact configuration never pays a calibration."""
+        if target >= 1.0:
+            return full
+        return choose_budget(self._curve(name, mode, k), target, full)
+
+    def _measure_probe(self, name: str, k: int) -> dict:
+        """Recall-vs-probes of the collection's IVF layout (probetune's
+        cell-rank trick, one pass)."""
+        from .operators.probetune import probe_recall_curve
 
         corpus_path, cents = self._ensure_ivf_index(name)
-        root = self._ivf_path(name)
-        fname = self._k_fname(CURVE_FILE, k)
-        meta = read_curve_meta(root, fname)
-        n = self._collection_nrows(name)
-        if curve_is_stale(meta, n, k=k):
-            curve = probe_recall_curve(
-                self.spark, corpus_path, cents, k=k, item_id="id"
-            )
-            write_probe_curve(
-                root, curve, k, DEFAULT_N_SAMPLE, n_corpus=n, fname=fname
-            )
-            return curve
-        return {int(p): float(r) for p, r in meta["curve"].items()}
-
-    def _ensure_flat_shortlist_curve(
-        self, name: str, fam: str, k: int = 10
-    ) -> dict:
-        """Measured recall@k-vs-shortlist curve for a flat code family
-        (fam in {bq, pq, sq}) — probetune's approximate-rank calibration
-        over the PERSISTED code artifact, published beside it, one
-        sidecar per requested k (VERDICT r10 #1). The code
-        artifacts are whole-corpus (any write invalidates their
-        directory, taking this sidecar with them), so the only extra
-        staleness trigger needed is the 2x-growth check, which covers
-        sidecars written before a code-table rebuild was observed."""
-        from .operators.probetune import (
-            DEFAULT_N_SAMPLE,
-            SHORTLIST_FILE,
-            curve_is_stale,
-            read_curve_meta,
-            scorer_shortlist_curve,
-            write_probe_curve,
+        return probe_recall_curve(
+            self.spark, corpus_path, cents, k=k, item_id="id"
         )
 
-        root = self._qpaths(name, fam)[0]
-        fname = self._k_fname(SHORTLIST_FILE, k)
-        n = self._collection_nrows(name)
-        meta = read_curve_meta(root, fname)
-        if not curve_is_stale(meta, n, k=k):
-            return {int(s): float(r) for s, r in meta["curve"].items()}
+    def _measure_shortlist(self, name: str, fam: str, k: int) -> dict:
+        """Recall-vs-shortlist of a flat code family: probetune's
+        approximate-rank calibration over the PERSISTED code table. The
+        tables are whole-corpus (any write invalidates their directory,
+        taking the sidecar along), so 2x growth is the only other
+        staleness trigger they need."""
+        from .operators.probetune import scorer_shortlist_curve
+
         encoded, scorer = self._flat_codes(name, fam)
-        curve = scorer_shortlist_curve(
+        return scorer_shortlist_curve(
             self.get(name), encoded, scorer, k=k, item_id="id"
         )
-        write_probe_curve(
-            root, curve, k, DEFAULT_N_SAMPLE, n_corpus=n,
-            fname=fname,
-        )
-        return curve
 
     def _flat_codes(self, name: str, fam: str):
         """(codes DataFrame, Scorer) of the collection's flat table."""
@@ -1300,7 +1291,6 @@ class VectorStore:
         from .functions.hashing import portable_hash64
         from .io.commitproto import publish_marker
         from .operators.probetune import (
-            curve_is_stale,
             read_curve_meta,
             scorer_shortlist_curve,
         )
@@ -1308,7 +1298,7 @@ class VectorStore:
         root = self._qpaths(name, fam)[0]
         fname = self._k_fname("_filtered_shortlist_curve.json", k)
         n = self._collection_nrows(name)
-        full = self._ensure_flat_shortlist_curve(name, fam, k=k)
+        full = self._curve(name, fam, k)
         meta = read_curve_meta(root, fname)
         want_bins = {f"{f:.2f}" for f in self._FILTERED_BINS}
         if not curve_is_stale(meta, n, k=k) and set(
@@ -1434,8 +1424,6 @@ class VectorStore:
         EXTRAPOLATED-conservative shortlist from the two smallest
         measured bins instead of scanning every survivor at full
         precision."""
-        from .operators.probetune import choose_shortlist
-
         bins = self._ensure_filtered_shortlist_curve(name, fam, k=k)
         lo = [f for f in bins if f <= frac + 1e-9]
         if not lo:
@@ -1444,9 +1432,9 @@ class VectorStore:
             )
         hi = [f for f in bins if f >= frac - 1e-9]
         ncoll = self._collection_nrows(name)
-        picks = [choose_shortlist(bins[max(lo)], target, ncoll)]
+        picks = [choose_budget(bins[max(lo)], target, ncoll)]
         if hi:
-            picks.append(choose_shortlist(bins[min(hi)], target, ncoll))
+            picks.append(choose_budget(bins[min(hi)], target, ncoll))
         return max(k, *picks)
 
     def _extrapolated_filtered_shortlist(
@@ -1478,7 +1466,7 @@ class VectorStore:
         import math
 
         from .operators.filtered import EXACT_CROSSOVER_N
-        from .operators.probetune import SHORTLIST_GRID, choose_shortlist
+        from .operators.probetune import SHORTLIST_GRID
 
         n = self._collection_nrows(name)
         budget = self.FILTERED_EXACT_SURVIVOR_ROWS or EXACT_CROSSOVER_N
@@ -1489,8 +1477,8 @@ class VectorStore:
         if len(fs) < 2:
             return None
         f1, f2 = fs[0], fs[1]
-        s1 = choose_shortlist(bins[f1], target, n)
-        s2 = choose_shortlist(bins[f2], target, n)
+        s1 = choose_budget(bins[f1], target, n)
+        s2 = choose_budget(bins[f2], target, n)
         if s1 >= n:
             return None
         alpha = 0.0
@@ -1544,7 +1532,7 @@ class VectorStore:
         stale = curve_is_stale(meta, n)
         if not stale and key in meta.get("targets", {}):
             return meta["targets"][key]
-        probe_curve = self._ensure_probe_curve(name, k=k)
+        probe_curve = self._curve(name, "probe", k)
         fam = mode.removeprefix("ivf")
         codes, p, _, _ = self._ensure_codes(name, fam, ivf=True)
         b = composed_serving_budget(
@@ -1570,49 +1558,96 @@ class VectorStore:
         return entry
 
     def _resolve_shortlist(
-        self, name: str, fam: str, k: int, shortlist: int | None
+        self, name: str, fam: str, k: int, shortlist: int | None,
+        target: float = DEFAULT_TARGET_RECALL,
     ) -> int:
         """Serving shortlist for a flat code family: the caller's explicit
-        value, else the smallest calibrated budget meeting
-        DEFAULT_TARGET_RECALL (VERDICT r08 #1 — the default is measured,
-        not guessed; until round 9 it was the max(10k, 100) folklore
-        constant, which measured 0.56-0.68 recall at sf0.1). The curve
-        is calibrated AT the requested k (VERDICT r10 #1), so the k
-        floor below is a structural guard, not the certification."""
+        value, else the smallest calibrated budget meeting ``target`` —
+        DEFAULT_TARGET_RECALL unless a query asks (VERDICT r08 #1: the
+        default is measured, not guessed; until round 9 it was the
+        max(10k, 100) folklore constant, which measured 0.56-0.68 recall
+        at sf0.1) — and the whole corpus at target >= 1 or when no grid
+        point meets the target. The curve is calibrated AT the requested
+        k (VERDICT r10 #1), so the k floor is a structural guard (a
+        re-rank pool never returns < k rows), not the certification."""
         if shortlist is not None:
             return shortlist
-        from .operators.probetune import (
-            DEFAULT_TARGET_RECALL,
-            choose_shortlist,
-        )
-
-        return max(k, choose_shortlist(
-            self._ensure_flat_shortlist_curve(name, fam, k=k),
-            DEFAULT_TARGET_RECALL,
-            self._collection_nrows(name),
+        return max(k, self._choose(
+            name, fam, k, target, self._collection_nrows(name)
         ))
 
     def _resolve_composed(
         self, name: str, mode: str, n_probe: int | None,
         shortlist: int | None, k: int = 10,
+        target: float = DEFAULT_TARGET_RECALL,
     ) -> tuple[int, int]:
-        """Serving (n_probe, shortlist) for ivfbq/ivfpq: explicit values
-        win; anything unspecified comes from the measured joint budget at
-        DEFAULT_TARGET_RECALL, calibrated AT the requested k (VERDICT
-        r10 #1). The measured shortlist still floors at k so a re-rank
-        pool can never return <k rows (ADVICE r09) — a structural
-        guard; the recall certification now comes from the k-keyed
-        curve itself."""
+        """Serving (n_probe, shortlist) for ivfbq/ivfpq/ivfsq: explicit
+        values win; anything unspecified comes from the measured joint
+        budget at ``target``, calibrated AT the requested k (VERDICT r10
+        #1), or, at target >= 1, full probe + full re-rank, which needs
+        only the cell COUNT — no calibration pass. The shortlist floors
+        at k (ADVICE r09), a structural guard like the flat one."""
         if n_probe is not None and shortlist is not None:
             return n_probe, shortlist
-        from .operators.probetune import DEFAULT_TARGET_RECALL
-
-        b = self._ensure_composed_budget(
-            name, mode, DEFAULT_TARGET_RECALL, k=k
-        )
+        if target >= 1.0:
+            b = {"n_probe": self._ensure_ivf_index(name)[1].count(),
+                 "shortlist": self._collection_nrows(name)}
+        else:
+            b = self._ensure_composed_budget(name, mode, target, k=k)
         return (
             n_probe if n_probe is not None else b["n_probe"],
             shortlist if shortlist is not None else max(k, b["shortlist"]),
+        )
+
+    def _target_budget(
+        self, name: str, mode: str, k: int, where: str | None, target: float
+    ) -> tuple[str, object]:
+        """``target_recall=`` resolved once, before any serve work:
+        (served mode, budget) under probetune.choose_budget — the
+        smallest measured budget meeting the target, else the budget that
+        guarantees an exact answer, else (mtlsh, graph: no finite budget
+        of theirs is exact) a reroute to the exact scan. The budget is
+        (n_probe, shortlist) for the compressed modes, the probe floor
+        for "auto", and probe bits / bucket budget / beam width for
+        lsh / mtlsh / graph.
+
+        With ``where=``, flat bq/pq/sq serve the shortlist of the
+        selectivity-binned filtered curve (VERDICT r09 Missing #1), or
+        exact over survivors at target >= 1 and below its smallest bin;
+        the auto-routable modes re-plan to the EP8 chooser with the
+        unfiltered probe curve's budget as its probe FLOOR, max'd with the
+        chooser's selectivity widening (ADVICE r08: never silently drop
+        the paid-for curve). Target >= 1 floors at every cell, which the
+        chooser always serves as exact over survivors."""
+        if where is not None and mode in _QUANT_FAMILIES:
+            s = None
+            if target < 1.0:
+                s = self._resolve_filtered_shortlist(
+                    name, mode, k, target, self._where_selectivity(name, where)
+                )
+            return ("exact", None) if s is None else (mode, (None, s))
+        if where is not None and mode in ("auto", *_FULL_BUDGET, *_COMPOSED):
+            if target >= 1.0:
+                return "auto", self._ensure_ivf_index(name)[1].count()
+            curve = self._curve(name, "probe", k)
+            return "auto", choose_budget(curve, target, max(curve))
+        if mode in _COMPOSED:
+            return mode, self._resolve_composed(
+                name, mode, None, None, k, target
+            )
+        if mode in _QUANT_FAMILIES:
+            return mode, (None, self._resolve_shortlist(
+                name, mode, k, None, target
+            ))
+        if mode in _FULL_BUDGET:
+            b = self._choose(name, mode, k, target, _FULL_BUDGET[mode])
+            return ("exact", None) if b is None else (mode, b)
+        raise ValueError(
+            f"target_recall= does not apply to mode={mode!r}"
+            + (" with where= — it applies to the filtered-chooser modes "
+               "(auto, or graph/mtlsh/lsh/ivf* which re-plan to it) and "
+               "bq/pq/sq (filtered shortlist curve)" if where is not None else
+               " — exact scans and rank-fusion modes have no recall dial")
         )
 
     def drift_status(self, name: str) -> dict:
@@ -1661,72 +1696,34 @@ class VectorStore:
         )
         self._invalidate_indexes(name, dirs=dirs)
 
-    def _ensure_lsh_bits_curve(self, name: str, k: int = 10) -> dict:
-        """Measured recall-vs-probe-bits curve for mode="lsh" (VERDICT
-        r08 #4): a ground-truth neighbor is reachable at probe depth b
-        iff its signature differs from the query's in <= b bits, so the
-        whole curve is ONE signature pass + a Hamming histogram — the
-        cell-rank trick with buckets in place of cells. b = n_planes
-        probes every bucket, so target_recall >= 1 is GUARANTEED exact
-        (the whole corpus becomes the candidate set)."""
-        from .io.commitproto import publish_marker
-        from .operators.probetune import curve_is_stale, lsh_bits_recall_curve
+    def _measure_lsh_bits(self, name: str, k: int) -> dict:
+        """Recall-vs-probe-bits of mode="lsh" (VERDICT r08 #4): a
+        ground-truth neighbor is reachable at probe depth b iff its
+        signature differs from the query's in <= b bits, so the whole
+        curve is ONE signature pass + a Hamming histogram — the cell-rank
+        trick with buckets in place of cells — over lsh_ann's own
+        geometry. b = n_planes probes every bucket, so target_recall >= 1
+        is GUARANTEED exact (the whole corpus becomes the candidate
+        set)."""
+        from .operators.ann import LSH_N_PLANES, LSH_SEED
+        from .operators.probetune import lsh_bits_recall_curve
 
-        path = self._lsh_calib_path(name, k)
-        n = self._collection_nrows(name)
-        meta = None
-        if os.path.exists(path):
-            with open(path) as fh:
-                meta = json.load(fh)
-        elif k == 10:
-            # legacy flat layout (pre-r12, ADVICE r11): the bare
-            # ``<name>.json`` is unambiguously this collection's k=10
-            # sidecar — honor it so the layout change recalibrates
-            # nothing. k-suffixed legacy files are NOT honored (their
-            # names are ambiguous with sibling collections'); those
-            # curves recalibrate once into the subdir layout.
-            legacy = os.path.join(self.root, ".lsh_calib", name + ".json")
-            if os.path.exists(legacy):
-                with open(legacy) as fh:
-                    meta = json.load(fh)
-        if not curve_is_stale(meta, n, k=k):
-            return {int(b): float(r) for b, r in meta["curve"].items()}
-        # n_planes=6, seed=42: the lsh_ann serving defaults (operators/ann.py)
-        curve = lsh_bits_recall_curve(
-            self.get(name).select("id", "embedding"),
-            dim=self.dim, n_planes=6, seed=42, k=k, item_id="id",
+        return lsh_bits_recall_curve(
+            self.get(name).select("id", "embedding"), dim=self.dim,
+            n_planes=LSH_N_PLANES, seed=LSH_SEED, k=k, item_id="id",
         )
-        publish_marker(
-            path,
-            {"n_corpus": int(n), "n_planes": 6, "k": int(k),
-             "calib": CALIB_VERSION,
-             "curve": {str(b): r for b, r in curve.items()}},
-        )
-        return curve
 
-    def _ensure_mtlsh_budget_curve(self, name: str, k: int = 10) -> dict:
-        """Measured recall-vs-probe-budget curve for mode="mtlsh": the
-        existing EP3 budget-curve harness (operators/mtlsh.py::
-        mt_lsh_budget_curve — candidate coverage of the exact ground
-        truth, signatures computed once) over a geometric budget grid,
-        persisted beside the signature index. The flip pool does NOT
-        enumerate every bucket, so no finite budget guarantees
-        exactness — target_recall >= 1 reroutes to the exact scan."""
-        from .io.commitproto import publish_marker
+    def _measure_mtlsh_budget(self, name: str, k: int) -> dict:
+        """Recall-vs-probe-budget of mode="mtlsh": the EP3 budget-curve
+        harness (operators/mtlsh.py::mt_lsh_budget_curve — candidate
+        coverage of the exact ground truth, signatures computed once)
+        over a geometric budget grid. The flip pool does NOT enumerate
+        every bucket, so no finite budget guarantees exactness —
+        target_recall >= 1 reroutes to the exact scan."""
         from .operators.mtlsh import mt_lsh_budget_curve, read_mt_lsh_meta
-        from .operators.probetune import (
-            calib_ground_truth,
-            curve_is_stale,
-            read_curve_meta,
-        )
+        from .operators.probetune import calib_ground_truth
 
-        idx = self._ensure_mtlsh_index(name)
-        fname = self._k_fname("_budget_curve.json", k)
-        meta = read_curve_meta(idx, fname)
-        n = self._collection_nrows(name)
-        if not curve_is_stale(meta, n, k=k):
-            return {int(b): float(r) for b, r in meta["curve"].items()}
-        im = read_mt_lsh_meta(idx)
+        im = read_mt_lsh_meta(self._mtlsh_path(name))
         L, planes = im["n_tables"], im["n_planes"]
         budgets = sorted({
             min(m * L, L * (1 << planes)) for m in (1, 2, 4, 8, 16, 32)
@@ -1740,40 +1737,29 @@ class VectorStore:
             n_planes=planes, n_tables=L, dim=im["dim"], seed=im["seed"],
             item_id="id",
         ).collect()
-        curve = {int(r.budget): float(r.mean_recall) for r in rows}
-        publish_marker(
-            os.path.join(idx, fname),
-            {"n_corpus": int(n), "k": int(k), "calib": CALIB_VERSION,
-             "curve": {str(b): r for b, r in curve.items()}},
-        )
-        return curve
+        return {int(r.budget): float(r.mean_recall) for r in rows}
 
-    def _ensure_graph_ef_curve(self, name: str, k: int = 10) -> dict:
-        """Measured recall-vs-beam-width curve for mode="graph" over the
-        PERSISTED degree-capped NSW index (one beam pass per grid point —
-        beam recall has no closed-form rank trick). The degree cap can
-        drop a node's last inbound edge, so no finite beam guarantees
-        exactness on this index — target_recall >= 1 reroutes to the
-        exact scan (graph_ann_fullbeam's provable config needs an
-        uncapped rebuild)."""
-        from .io.commitproto import publish_marker
-        from .operators.graphann import graph_ann_pruned
-        from .operators.probetune import (
-            calib_ground_truth,
-            curve_is_stale,
-            read_curve_meta,
-        )
-
+    def _graph_calib_root(self, name: str) -> str:
+        """The graph index, with the deferred-write buffer folded in:
+        calibration measures the INDEX, and buffered rows are part of the
+        ground truth (collection rows) but not of the beam search — so
+        the curve prices the real index."""
         idx = self._ensure_graph_index(name)
-        # calibration measures the INDEX; deferred-buffer rows are part
-        # of the ground truth (collection rows) but not of the beam
-        # search — fold them first so the curve prices the real index
         self._fold_graph_pending(name)
-        fname = self._k_fname("_ef_curve.json", k)
-        meta = read_curve_meta(idx, fname)
-        n = self._collection_nrows(name)
-        if not curve_is_stale(meta, n, k=k):
-            return {int(ef): float(r) for ef, r in meta["curve"].items()}
+        return idx
+
+    def _measure_graph_ef(self, name: str, k: int) -> dict:
+        """Recall-vs-beam-width of mode="graph" over the PERSISTED
+        degree-capped NSW index (one beam pass per grid point — beam
+        recall has no closed-form rank trick). The degree cap can drop a
+        node's last inbound edge, so no finite beam guarantees exactness
+        on this index — target_recall >= 1 reroutes to the exact scan
+        (graph_ann_fullbeam's provable config needs an uncapped
+        rebuild)."""
+        from .operators.graphann import graph_ann_pruned
+        from .operators.probetune import calib_ground_truth
+
+        idx = self._graph_path(name)
         corpus = self.get(name).select("id", "embedding")
         # self-pair-free gt AT the requested k (VERDICT r10 #1)
         qs, gt = calib_ground_truth(corpus, k=k, item_id="id")
@@ -1811,11 +1797,6 @@ class VectorStore:
             curve[ef] = round(hits / total, 4)
             if curve[ef] >= 1.0:
                 break
-        publish_marker(
-            os.path.join(idx, fname),
-            {"n_corpus": int(n), "k": int(k), "calib": CALIB_VERSION,
-             "curve": {str(ef): r for ef, r in curve.items()}},
-        )
         return curve
 
     # -- multiprobe multi-table LSH index (per-collection) -----------------
@@ -2140,70 +2121,24 @@ class VectorStore:
         corpus-text scan on any hybrid path."""
         if (query_texts is None) == (query_vecs is None):
             raise ValueError("provide exactly one of query_texts / query_vecs")
-        # read-side crash heal FIRST (ADVICE r09): the where+target_recall
-        # block below calibrates a probe curve, and calibrating against
-        # torn artifacts then healing would discard the curve while this
-        # query's floor was derived from the torn state
+        # read-side crash heal FIRST (ADVICE r09): resolving a target can
+        # calibrate a curve, and calibrating against torn artifacts then
+        # healing would discard the curve this query's budget came from
         self._heal_torn_freshen(name)
-        if target_recall is not None and where is not None:
-            # where + a recall target. Two measured routes:
-            #
-            # 1. auto-routable modes (auto/graph/mtlsh/lsh/ivf*) go
-            #    through the EP8 chooser with a CURVE floor: min_probe is
-            #    the
-            #    budget the collection's recall-vs-probes curve demands
-            #    for the target on the unfiltered corpus, max'd with the
-            #    chooser's selectivity widening (survivor starvation) —
-            #    never silently dropping the paid-for curve (ADVICE r08).
-            #    target >= 1 floors at every cell, which the chooser
-            #    always serves as exact-over-survivors.
-            #
-            # 2. flat bq/pq/sq (VERDICT r09 Missing #1 — previously
-            #    refused) serve a shortlist from the SELECTIVITY-BINNED
-            #    filtered curve (_ensure_filtered_shortlist_curve): the
-            #    measured predicate selectivity picks the bracketing
-            #    bins, the conservative max of their chosen shortlists
-            #    serves. tr >= 1, or a filter MORE selective than the
-            #    smallest calibrated bin, reroutes to exact-over-
-            #    survivors — certain, and cheap exactly where it fires.
+        budget = None  # a resolved target's lsh bits / mtlsh buckets / ef
+        if target_recall is not None:
             if n_probe is not None or shortlist is not None:
                 raise ValueError(
                     "give target_recall= OR explicit n_probe=/shortlist= "
                     "budgets, not both"
                 )
-            if mode in ("bq", "pq", "sq"):
-                if target_recall >= 1.0:
-                    mode = "exact"
-                else:
-                    frac = self._where_selectivity(name, where)
-                    s = self._resolve_filtered_shortlist(
-                        name, mode, k, target_recall, frac
-                    )
-                    if s is None:
-                        mode = "exact"
-                    else:
-                        shortlist = s
-                target_recall = None
-            elif mode not in ("auto", "graph", "mtlsh", "lsh", "ivfbq",
-                              "ivfpq", "ivfsq"):
-                raise ValueError(
-                    f"target_recall= with where= applies to the filtered-"
-                    f"chooser modes (auto, or graph/mtlsh/lsh/ivfbq/ivfpq/"
-                    f"ivfsq which re-plan to it) and the flat compressed "
-                    f"modes (bq/pq/sq — selectivity-binned shortlist "
-                    f"curve), not mode={mode!r}"
-                )
-            else:
-                from .operators.probetune import choose_n_probe
-
-                curve = self._ensure_probe_curve(name, k=k)
-                floor = (
-                    max(curve) if target_recall >= 1.0
-                    else choose_n_probe(curve, target_recall)
-                )
-                auto_opts = dict(auto_opts or {}, min_probe=floor)
-                mode = "auto"
-                target_recall = None  # resolved into the chooser floor
+            mode, budget = self._target_budget(
+                name, mode, k, where, target_recall
+            )
+            if mode == "auto":
+                auto_opts = dict(auto_opts or {}, min_probe=budget)
+            elif mode in (*_QUANT_FAMILIES, *_COMPOSED):
+                n_probe, shortlist = budget
         if query_texts is not None:
             qdf = local_df(
                 self.spark,
@@ -2219,86 +2154,6 @@ class VectorStore:
                 [(i, [float(x) for x in v]) for i, v in enumerate(query_vecs)],
                 "query_id bigint, query_vec array<float>",
             )
-        # -- target_recall: the measured dial on EVERY approximate family
-        # (operators/probetune.py + the per-family curve builders above;
-        # VERDICT r08 #4). Each family resolves its own budget knob from
-        # its persisted calibration curve; target >= 1.0 degenerates to a
-        # GUARANTEED-exact configuration: full probe + full re-rank where
-        # the structure can prove it (ivf*/bq/pq/sq; lsh probes all 2^b
-        # buckets at b = n_planes), and a reroute to the exact scan where
-        # it cannot (mtlsh's flip pool does not enumerate every bucket;
-        # the degree-capped graph can drop a node's last inbound edge).
-        lsh_bits: int | None = None
-        graph_ef: int | None = None
-        mtlsh_budget: int | None = None
-        if target_recall is not None:
-            if n_probe is not None or shortlist is not None:
-                raise ValueError(
-                    "give target_recall= OR explicit n_probe=/shortlist= "
-                    "budgets, not both"
-                )
-            if mode in ("exact", "blas", "mmr", "hybrid", "auto"):
-                raise ValueError(
-                    f"target_recall= does not apply to mode={mode!r} — "
-                    "exact scans and rank-fusion modes have no recall dial"
-                )
-            if mode in ("ivfbq", "ivfpq", "ivfsq"):
-                if target_recall >= 1.0:
-                    # full probe needs only the cell COUNT — no
-                    # calibration pass for a guaranteed-exact config
-                    _, cents = self._ensure_ivf_index(name)
-                    n_probe = cents.count()
-                    shortlist = self._collection_nrows(name)
-                else:
-                    # curve calibrated AT the requested k (VERDICT r10
-                    # #1); the k floor stays as a structural row-count
-                    # guard (ADVICE r09)
-                    b = self._ensure_composed_budget(
-                        name, mode, target_recall, k=k
-                    )
-                    n_probe, shortlist = b["n_probe"], max(k, b["shortlist"])
-            elif mode in ("bq", "pq", "sq"):
-                from .operators.probetune import choose_shortlist
-
-                ncoll = self._collection_nrows(name)
-                if target_recall >= 1.0:
-                    shortlist = ncoll
-                else:
-                    shortlist = max(k, choose_shortlist(
-                        self._ensure_flat_shortlist_curve(name, mode, k=k),
-                        target_recall, ncoll,
-                    ))
-            elif mode == "lsh":
-                curve = self._ensure_lsh_bits_curve(name, k=k)
-                nb = max(curve)
-                lsh_bits = nb if target_recall >= 1.0 else next(
-                    (b for b in sorted(curve) if curve[b] >= target_recall),
-                    nb,
-                )
-            elif mode == "mtlsh":
-                if target_recall >= 1.0:
-                    mode = "exact"
-                else:
-                    curve = self._ensure_mtlsh_budget_curve(name, k=k)
-                    mtlsh_budget = next(
-                        (b for b in sorted(curve)
-                         if curve[b] >= target_recall),
-                        None,
-                    )
-                    if mtlsh_budget is None:
-                        mode = "exact"  # no measured budget certifies it
-            elif mode == "graph":
-                if target_recall >= 1.0:
-                    mode = "exact"
-                else:
-                    curve = self._ensure_graph_ef_curve(name, k=k)
-                    graph_ef = next(
-                        (ef for ef in sorted(curve)
-                         if curve[ef] >= target_recall),
-                        None,
-                    )
-                    if graph_ef is None:
-                        mode = "exact"  # no measured beam certifies it
         corpus = self.get(name)
         if where is not None:
             if mode in ("graph", "mtlsh", "ivfbq", "ivfpq", "ivfsq"):
@@ -2395,7 +2250,7 @@ class VectorStore:
 
             return lsh_ann(
                 qdf, corpus, k=k, dim=self.dim,
-                n_probe_bits=lsh_bits if lsh_bits is not None else 3,
+                n_probe_bits=3 if budget is None else budget,
                 item_id="id", item_vec="embedding",
             )
         if mode == "graph":
@@ -2411,7 +2266,7 @@ class VectorStore:
             )
             res = graph_ann_pruned(
                 qd, self.spark, path, k=k,
-                **({"ef_search": graph_ef} if graph_ef is not None else {}),
+                **({} if budget is None else {"ef_search": budget}),
             )
             return self._merge_graph_pending(name, qd, res, k)
         if mode in ("bq", "pq", "sq", "ivfbq", "ivfpq", "ivfsq"):
@@ -2425,7 +2280,7 @@ class VectorStore:
             return mt_lsh_ann_pruned(
                 qdf, self.spark, path,
                 corpus.select("id", "embedding"),
-                k=k, n_probe_buckets=mtlsh_budget, item_id="id",
+                k=k, n_probe_buckets=budget, item_id="id",
             )
         raise ValueError(
             f"unknown mode {mode!r}; one of "
@@ -2482,3 +2337,76 @@ class VectorStore:
             self._resolve_shortlist(name, fam, k, shortlist),
             item_id="id", n_corpus=n_corpus,
         ).select("query_id", "rank", "item_id", "dist")
+
+
+class _CurveKind(NamedTuple):
+    """One calibrated budget knob in ``VectorStore._curve``'s lifecycle.
+
+    - ``root(vs, name)`` is the sidecar directory; resolving it builds the
+      index the curve prices (mtlsh; graph also folds its write buffer) —
+      the IVF layout and the flat code tables build when measured;
+    - ``fname(k)`` is the sidecar's file name at requested k;
+    - ``measure(vs, name, k)`` calibrates a fresh curve;
+    - ``extra`` fields ride in the sidecar beside k, calib, n_corpus and
+      the curve;
+    - ``legacy(vs, name, k)``: an older sidecar path read when the
+      current one is absent, or None.
+    """
+
+    root: Callable
+    fname: Callable
+    measure: Callable
+    extra: dict = {}
+    legacy: Callable | None = None
+
+
+@functools.cache
+def _curve_kinds() -> dict[str, _CurveKind]:
+    from .operators.probetune import (
+        CURVE_FILE,
+        DEFAULT_N_SAMPLE,
+        SHORTLIST_FILE,
+    )
+
+    def k_keyed(base: str) -> Callable:
+        return functools.partial(VectorStore._k_fname, base)
+
+    sampled = {"n_sample": DEFAULT_N_SAMPLE}
+    flat = {
+        fam: _CurveKind(
+            lambda vs, name, fam=fam: vs._qpaths(name, fam)[0],
+            k_keyed(SHORTLIST_FILE),
+            lambda vs, name, k, fam=fam: vs._measure_shortlist(name, fam, k),
+            sampled,
+        )
+        for fam in _QUANT_FAMILIES
+    }
+    return {
+        "probe": _CurveKind(
+            VectorStore._ivf_path, k_keyed(CURVE_FILE),
+            VectorStore._measure_probe, sampled,
+        ),
+        **flat,
+        "lsh": _CurveKind(
+            lambda vs, name: os.path.join(vs.root, ".lsh_calib", name),
+            lambda k: f"k{int(k)}.json",
+            VectorStore._measure_lsh_bits,
+            {"n_planes": LSH_N_PLANES},
+            # the pre-r12 flat layout's bare ``<name>.json`` is
+            # unambiguously this collection's k=10 curve — honored, so
+            # the layout change recalibrates nothing; k-suffixed legacy
+            # names are ambiguous with sibling collections' and are not
+            legacy=lambda vs, name, k: (
+                os.path.join(vs.root, ".lsh_calib", name + ".json")
+                if k == 10 else None
+            ),
+        ),
+        "mtlsh": _CurveKind(
+            VectorStore._ensure_mtlsh_index, k_keyed("_budget_curve.json"),
+            VectorStore._measure_mtlsh_budget,
+        ),
+        "graph": _CurveKind(
+            VectorStore._graph_calib_root, k_keyed("_ef_curve.json"),
+            VectorStore._measure_graph_ef,
+        ),
+    }

@@ -33,6 +33,13 @@ from ..io.relcache import read_layout
 from ..functions.vector import l2_dist
 from .knn import exact_knn
 
+# The sign-LSH geometry (hyperplane count, plane seed) of lsh_ann and the
+# bucket-partitioned lsh index: the recall-vs-probe-bits calibration
+# (probetune.lsh_bits_recall_curve) prices exactly this pair, so both
+# read it from here — a curve can never price a different index.
+LSH_N_PLANES = 6
+LSH_SEED = 42
+
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic pseudo-random unit hyperplanes (Box-Muller over a
@@ -114,10 +121,10 @@ def lsh_ann(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    n_planes: int = 6,
+    n_planes: int = LSH_N_PLANES,
     n_probe_bits: int = 2,
     dim: int = 64,
-    seed: int = 42,
+    seed: int = LSH_SEED,
     query_id: str = "query_id",
     query_vec: str = "query_vec",
     item_id: str = "item_id",
@@ -576,9 +583,9 @@ def ivf_ann_pruned(
 def write_lsh_corpus(
     corpus: DataFrame,
     path: str,
-    n_planes: int = 6,
+    n_planes: int = LSH_N_PLANES,
     dim: int = 64,
-    seed: int = 42,
+    seed: int = LSH_SEED,
     item_vec: str = "embedding",
 ) -> None:
     """Persist the corpus partitioned by LSH bucket (sign signature) — the
@@ -595,10 +602,10 @@ def lsh_ann_pruned(
     spark,
     corpus_path: str,
     k: int = 10,
-    n_planes: int = 6,
+    n_planes: int = LSH_N_PLANES,
     n_probe_bits: int = 2,
     dim: int = 64,
-    seed: int = 42,
+    seed: int = LSH_SEED,
     query_id: str = "query_id",
     query_vec: str = "query_vec",
     item_id: str = "item_id",

@@ -25,19 +25,21 @@ short-list quantization loss on top, bounded by their re-rank coverage
 right planning number.
 
 Persisted beside the centroids (``_probe_curve.json``, commitproto
-publish) at build time; ``choose_n_probe(curve, target)`` picks the
-smallest budget whose measured recall meets the target. ``target >= 1``
-always returns every cell — sampled calibration can measure 1.0 before
-full probe, but only full probe GUARANTEES it (that identity is what
-the oracled facade degeneration pins). The curve is a pure function of
-the frozen quantizer + corpus snapshot; upserts do not recompute it —
-distribution change is the drift tracker's job (operators/drift.py),
-and the rebuild it triggers refreshes the curve with everything else.
+publish) at build time; ``choose_budget(curve, target, full)`` picks
+the smallest budget whose measured recall meets the target — the one
+rule every curve in this module serves through. ``target >= 1``
+always returns ``full`` (every cell) — sampled calibration can measure
+1.0 before full probe, but only full probe GUARANTEES it (that identity
+is what the oracled facade degeneration pins). The curve is a pure
+function of the frozen quantizer + corpus snapshot; upserts do not
+recompute it — distribution change is the drift tracker's job
+(operators/drift.py), and the rebuild it triggers refreshes the curve
+with everything else.
 
 At 100 TB: calibration cost is one exact kNN of n_sample queries
 (n_sample=32 default — the curve estimates a corpus-wide fraction, so
 error ~ 1/sqrt(n_sample * k)) amortized into the build; serve-time
-choose_n_probe is a dict lookup.
+choose_budget is a dict lookup.
 """
 
 from __future__ import annotations
@@ -50,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
 from ..io.relcache import read_layout
+from .ann import LSH_N_PLANES, LSH_SEED
 from .knn import exact_knn
 
 CURVE_FILE = "_probe_curve.json"
@@ -86,7 +89,7 @@ DEFAULT_TARGET_RECALL = 0.85
 # old contract.
 CALIB_VERSION = 3
 # Shortlist budgets are calibrated on this grid (curve size stays O(grid),
-# not O(corpus)); choose_shortlist falls back to the full corpus when no
+# not O(corpus)); choose_budget falls back to the full corpus when no
 # grid point meets the target. The 6400/12800 points exist for large or
 # adversarial corpora (and the survivor-restricted filtered bins over
 # them) where 3200 candidates genuinely can't certify 0.85 — without
@@ -233,49 +236,25 @@ def curve_is_stale(
     return current_n > CURVE_STALE_GROWTH * int(n0)
 
 
-def choose_n_probe(curve: dict[int, float], target_recall: float) -> int:
-    """Smallest measured probe budget meeting the target; ``target >= 1``
-    returns every cell (only full probe GUARANTEES exactness — the
-    sampled curve may reach 1.0 earlier)."""
-    n_cells = max(curve)
-    if target_recall >= 1.0:
-        return n_cells
-    for p in sorted(curve):
-        if curve[p] >= target_recall:
-            return p
-    return n_cells
+def choose_budget(
+    curve: dict[int, float], target: float, full: int | None
+) -> int | None:
+    """The one budget rule: the smallest measured budget whose recall
+    meets ``target`` (capped at ``full``), else ``full``.
 
-
-def _choose_probe_with_margin(
-    curve: dict[int, float], target: float, margin: float
-) -> int:
-    """Smallest probe whose ceiling clears target+margin — WITHOUT ever
-    entering choose_n_probe's ``>= 1.0`` guarantee branch. The margin is
-    an engineering cushion for downstream quantization loss, not a user
-    exactness request: a target of 0.97 + 0.03 must not silently become
-    a full-probe scan when the measured curve certifies 0.97 (or even
-    1.0) at a small budget (api.py intercepts a REAL target >= 1.0
-    before budgets are resolved)."""
-    t = min(target + margin, 0.9999)
-    for p in sorted(curve):
-        if curve[p] >= t:
-            return p
-    return max(curve)
-
-
-def choose_shortlist(
-    curve: dict[int, float], target_recall: float, n_corpus: int
-) -> int:
-    """Smallest calibrated shortlist meeting the target; ``target >= 1``
-    (or no grid point reaching the target) returns the full corpus —
-    only re-ranking everything GUARANTEES exactness (the same identity
-    contract as :func:`choose_n_probe`)."""
-    if target_recall >= 1.0:
-        return n_corpus
-    for s in sorted(curve):
-        if curve[s] >= target_recall:
-            return min(s, n_corpus)
-    return n_corpus
+    ``full`` is the budget that GUARANTEES an exact answer — every cell,
+    the whole corpus, every LSH bucket — and ``target >= 1`` always gets
+    it: the sampled curve may reach 1.0 earlier, but only ``full`` proves
+    it (the identity the oracled facade degeneration pins). ``None``
+    means no finite budget of the structure is exact (the mt-LSH flip
+    pool, the degree-capped graph): the caller reroutes to the exact
+    scan."""
+    if target >= 1.0:
+        return full
+    for b in sorted(curve):
+        if curve[b] >= target:
+            return b if full is None else min(b, full)
+    return full
 
 
 # -- shortlist calibration (VERDICT r08 #1): the cell-rank trick, --------
@@ -403,66 +382,6 @@ def scorer_shortlist_curve(
     return shortlist_recall_curve(scored, gt, grid)
 
 
-def bq_shortlist_curve(
-    corpus: DataFrame,
-    encoded: DataFrame,
-    sums,
-    n: int,
-    k: int = 10,
-    n_sample: int = DEFAULT_N_SAMPLE,
-    grid: tuple[int, ...] = SHORTLIST_GRID,
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
-) -> dict[int, float]:
-    """Measured recall-vs-shortlist of the flat BQ path (Hamming ranks)."""
-    from .bq import bq_scorer
-
-    return scorer_shortlist_curve(
-        corpus, encoded, bq_scorer(sums, n), k, n_sample, grid, item_id,
-        item_vec,
-    )
-
-
-def pq_shortlist_curve(
-    corpus: DataFrame,
-    encoded: DataFrame,
-    codebooks,
-    k: int = 10,
-    n_sample: int = DEFAULT_N_SAMPLE,
-    grid: tuple[int, ...] = SHORTLIST_GRID,
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
-) -> dict[int, float]:
-    """Measured recall-vs-shortlist of the flat PQ path (ADC ranks)."""
-    from .pq import pq_scorer
-
-    return scorer_shortlist_curve(
-        corpus, encoded, pq_scorer(codebooks), k, n_sample, grid, item_id,
-        item_vec,
-    )
-
-
-def sq_shortlist_curve(
-    corpus: DataFrame,
-    encoded: DataFrame,
-    vmin,
-    scale,
-    k: int = 10,
-    n_sample: int = DEFAULT_N_SAMPLE,
-    grid: tuple[int, ...] = SHORTLIST_GRID,
-    item_id: str = "item_id",
-    item_vec: str = "embedding",
-) -> dict[int, float]:
-    """Measured recall-vs-shortlist of the flat SQ path (decoded-int8
-    ranks)."""
-    from .sq import sq_scorer
-
-    return scorer_shortlist_curve(
-        corpus, encoded, sq_scorer(vmin, scale), k, n_sample, grid, item_id,
-        item_vec,
-    )
-
-
 def _curve_from_ranked(
     ranked: DataFrame, gt: DataFrame, grid: tuple[int, ...]
 ) -> dict[int, float]:
@@ -553,7 +472,17 @@ def composed_serving_budget(
             item_id=item_id, item_vec=item_vec,
         )
     n_cells = max(probe_curve)
-    p = _choose_probe_with_margin(probe_curve, target_recall, 0.03)
+
+    def probe_for(margin: float) -> int:
+        # the margin is a cushion for quantization loss, not an exactness
+        # request: capped below 1.0 so target + margin never takes
+        # choose_budget's full-probe guarantee branch (a REAL target >= 1
+        # never reaches this calibration)
+        return choose_budget(
+            probe_curve, min(target_recall + margin, 0.9999), n_cells
+        )
+
+    p = probe_for(0.03)
     for attempt in range(2):
         qcells = exact_knn(
             qs, centroids, k=p, item_id="cell", item_vec="centroid"
@@ -565,11 +494,9 @@ def composed_serving_budget(
         curve = _joint_curve(scored, qcells, gt, grid)
         if max(curve.values()) >= target_recall or p >= n_cells:
             break
-        p = min(n_cells, max(
-            p + 1, _choose_probe_with_margin(probe_curve, target_recall, 0.10)
-        ))
+        p = min(n_cells, max(p + 1, probe_for(0.10)))
     n_corpus = corpus.count()
-    s = choose_shortlist(curve, target_recall, n_corpus)
+    s = choose_budget(curve, target_recall, n_corpus)
     return {
         "n_probe": int(p),
         "shortlist": int(s),
@@ -582,8 +509,8 @@ def composed_serving_budget(
 def lsh_bits_recall_curve(
     corpus: DataFrame,
     dim: int,
-    n_planes: int = 6,
-    seed: int = 42,
+    n_planes: int = LSH_N_PLANES,
+    seed: int = LSH_SEED,
     k: int = 10,
     n_sample: int = DEFAULT_N_SAMPLE,
     item_id: str = "item_id",

@@ -233,7 +233,7 @@ def _ivf_serving(spark: SparkSession, sf_dir: str, k: int = 10) -> dict:
     cells)."""
     from ..operators.probetune import (
         DEFAULT_TARGET_RECALL,
-        choose_n_probe,
+        choose_budget,
         probe_recall_curve,
     )
 
@@ -243,7 +243,9 @@ def _ivf_serving(spark: SparkSession, sf_dir: str, k: int = 10) -> dict:
             spark, corpus_path, cents, k=k, item_id="vec_id"
         )
         return {
-            "n_probe": choose_n_probe(curve, DEFAULT_TARGET_RECALL),
+            "n_probe": choose_budget(
+                curve, DEFAULT_TARGET_RECALL, max(curve)
+            ),
             "curve": {str(p): r for p, r in curve.items()},
             "target": DEFAULT_TARGET_RECALL,
         }
@@ -263,33 +265,34 @@ def _flat_serving(
     _k_fname sidecars)."""
     from ..operators.probetune import (
         DEFAULT_TARGET_RECALL,
-        bq_shortlist_curve,
-        choose_shortlist,
-        pq_shortlist_curve,
-        sq_shortlist_curve,
+        choose_budget,
+        scorer_shortlist_curve,
     )
 
     def compute():
         emb = load_table(spark, sf_dir, "embeddings")
         n = emb.count()
+        # the calibration scan is the family's serve-path scorer
+        # (operators/quantized.py), as in _composed_serving
         if fam == "pq":
+            from ..operators.pq import pq_scorer
+
             enc, books = _get_or_build_pq(spark, sf_dir)
-            curve = pq_shortlist_curve(emb, enc, books, k=k, item_id="vec_id")
+            scorer = pq_scorer(books)
         elif fam == "sq":
+            from ..operators.sq import sq_scorer
+
             enc, vmin, scale = _get_or_build_sq(spark, sf_dir)
-            curve = sq_shortlist_curve(
-                emb, enc, vmin, scale, k=k, item_id="vec_id"
-            )
+            scorer = sq_scorer(vmin, scale)
         else:
-            from ..operators.bq import bq_encode, bq_train
+            from ..operators.bq import bq_encode, bq_scorer, bq_train
 
             sums, bn = bq_train(emb, item_vec="embedding", dim=64)
             enc = bq_encode(emb, sums, bn, item_id="vec_id")
-            curve = bq_shortlist_curve(
-                emb, enc, sums, bn, k=k, item_id="vec_id"
-            )
+            scorer = bq_scorer(sums, bn)
+        curve = scorer_shortlist_curve(emb, enc, scorer, k=k, item_id="vec_id")
         return {
-            "shortlist": max(k, choose_shortlist(
+            "shortlist": max(k, choose_budget(
                 curve, DEFAULT_TARGET_RECALL, n
             )),
             "curve": {str(s): r for s, r in curve.items()},
@@ -363,18 +366,17 @@ def _lsh_serving(spark: SparkSession, sf_dir: str, k: int = 10) -> dict:
     DEFAULT_TARGET_RECALL; falls back to n_planes (all buckets — exact)
     when no depth certifies the target. ``k`` keys the sidecar (k-keyed
     calibration contract)."""
+    from ..operators.ann import LSH_N_PLANES
     from ..operators.probetune import (
         DEFAULT_TARGET_RECALL,
+        choose_budget,
         lsh_bits_recall_curve,
     )
 
     def compute():
         emb = load_table(spark, sf_dir, "embeddings")
         curve = lsh_bits_recall_curve(emb, dim=64, k=k, item_id="vec_id")
-        bits = next(
-            (b for b in sorted(curve) if curve[b] >= DEFAULT_TARGET_RECALL),
-            max(curve),
-        )
+        bits = choose_budget(curve, DEFAULT_TARGET_RECALL, LSH_N_PLANES)
         return {
             "n_probe_bits": int(bits),
             "curve": {str(b): r for b, r in curve.items()},
@@ -395,6 +397,7 @@ def _mtlsh_serving(spark: SparkSession, sf_dir: str, k: int = 10) -> dict:
     from ..operators.probetune import (
         DEFAULT_TARGET_RECALL,
         calib_ground_truth,
+        choose_budget,
     )
 
     def compute():
@@ -406,10 +409,9 @@ def _mtlsh_serving(spark: SparkSession, sf_dir: str, k: int = 10) -> dict:
             qs, emb, gt, [16, 32, 64, 128, 256], k=k, item_id="vec_id"
         ).collect()
         curve = {int(r.budget): float(r.mean_recall) for r in rows}
-        budget = next(
-            (b for b in sorted(curve) if curve[b] >= DEFAULT_TARGET_RECALL),
-            max(curve),
-        )
+        # the largest grid budget is this entry's fallback (the facade
+        # reroutes a miss to the exact scan instead)
+        budget = choose_budget(curve, DEFAULT_TARGET_RECALL, max(curve))
         return {
             "n_probe_buckets": int(budget),
             "curve": {str(b): r for b, r in curve.items()},

@@ -281,7 +281,8 @@ def client_facade_filtered_tr1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Round 10 (VERDICT r09 Missing #1): where= + target_recall= on the FLAT
 # compressed families. tr < 1 serves a shortlist from the selectivity-
-# binned filtered curve (api._ensure_filtered_shortlist_curve); these
+# binned filtered curve (api._ensure_filtered_shortlist_curve, read by
+# probetune.choose_budget); these
 # entries pin the tr >= 1 fixed point — exact-over-survivors == filtered
 # exact kNN bit-for-bit — for each family, so the dial's guarantee is
 # hash-oracled on the same route a real "compressed collection + metadata
