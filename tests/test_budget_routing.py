@@ -293,6 +293,20 @@ def test_target_and_explicit_budget_refused(store, served):
         vs.query("c", query_vecs=q, k=K, mode="exact", target_recall=0.8)
 
 
+@pytest.mark.parametrize("mode", ["bq", "pq", "sq", "ivfbq", "ivfpq", "ivfsq"])
+def test_one_row_count_per_compressed_query(store, served, monkeypatch, mode):
+    # the collection's row count feeds the broadcast gate, the full
+    # budget and the curve staleness check: read once per query
+    vs = store[0]
+    counted = []
+    nrows = vs._collection_nrows
+    monkeypatch.setattr(
+        vs, "_collection_nrows", lambda name: counted.append(name) or nrows(name)
+    )
+    _serve(store, served, mode, None)
+    assert counted == ["c"]
+
+
 def test_sidecars_read_not_rewritten(store):
     # runs last in this module: every case above only read the sidecars
     vs, _, _, before = store

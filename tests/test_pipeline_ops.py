@@ -311,7 +311,7 @@ def test_index_cache_invalidates_on_source_change(spark, tmp_path):
     import shutil
 
     from vectordb_acc_and_speed_exp_spark.queries.pipeline import (
-        _get_or_build_sq,
+        _get_or_build_codes,
         _index_root,
     )
 
@@ -322,13 +322,13 @@ def test_index_cache_invalidates_on_source_change(spark, tmp_path):
     (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, dst)
     shutil.rmtree(_index_root(sf_dir), ignore_errors=True)
 
-    _get_or_build_sq(spark, sf_dir)
+    _get_or_build_codes(spark, sf_dir, "sq")
     done = os.path.join(_index_root(sf_dir), "sq._DONE")
     fp1 = open(done).read()
     marker_mtime = os.path.getmtime(done)
 
     # unchanged source: cache hit, marker untouched
-    _get_or_build_sq(spark, sf_dir)
+    _get_or_build_codes(spark, sf_dir, "sq")
     assert open(done).read() == fp1
     assert os.path.getmtime(done) == marker_mtime
 
@@ -338,9 +338,87 @@ def test_index_cache_invalidates_on_source_change(spark, tmp_path):
             os.utime(os.path.join(dst, f))
     else:
         os.utime(dst)
-    _get_or_build_sq(spark, sf_dir)
+    _get_or_build_codes(spark, sf_dir, "sq")
     assert open(done).read() != fp1
     shutil.rmtree(_index_root(sf_dir), ignore_errors=True)
+
+
+def test_deleted_code_table_rebuilds(spark, tmp_path):
+    """A fresh marker does not cover a missing output: deleting the pq
+    code table rebuilds it, with the same rows."""
+    import os
+    import shutil
+
+    from vectordb_acc_and_speed_exp_spark.queries import load_all
+    from vectordb_acc_and_speed_exp_spark.queries.pipeline import _index_root
+
+    sf_dir = str(tmp_path / "sf_copy")
+    os.makedirs(sf_dir)
+    shutil.copy(
+        "/root/testdata/sf0.001/embeddings.parquet",
+        os.path.join(sf_dir, "embeddings.parquet"),
+    )
+    root = _index_root(sf_dir)
+    shutil.rmtree(root, ignore_errors=True)
+    stats = load_all()["pq_build_stats"].fn
+    try:
+        before = sorted(stats(spark, sf_dir).collect())
+        shutil.rmtree(os.path.join(root, "pq_codes"))
+        assert sorted(stats(spark, sf_dir).collect()) == before
+        assert os.path.exists(os.path.join(root, "pq_codes", "_drift.json"))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_mtlsh_entry_miss_reroutes_to_exact(spark, tmp_path, monkeypatch):
+    """No grid budget meeting the target stores a null budget, and the
+    entry serves the exact scan: no bucket budget certifies the target."""
+    import json
+    import os
+    import shutil
+    from collections import namedtuple
+
+    from vectordb_acc_and_speed_exp_spark.io import load_table
+    from vectordb_acc_and_speed_exp_spark.operators import mtlsh, probetune
+    from vectordb_acc_and_speed_exp_spark.operators.knn import exact_knn
+    from vectordb_acc_and_speed_exp_spark.queries.pipeline import (
+        _index_root,
+        _query_set,
+        mt_lsh_ann_topk,
+    )
+
+    sf_dir = str(tmp_path / "sf_copy")
+    os.makedirs(sf_dir)
+    shutil.copy(
+        "/root/testdata/sf0.001/embeddings.parquet",
+        os.path.join(sf_dir, "embeddings.parquet"),
+    )
+    root = _index_root(sf_dir)
+    shutil.rmtree(root, ignore_errors=True)
+    point = namedtuple("point", "budget mean_recall")
+
+    class Missing:
+        def collect(self):
+            return [point(b, 0.5) for b in (16, 32, 64, 128, 256)]
+
+    monkeypatch.setattr(
+        probetune, "calib_ground_truth", lambda *a, **kw: (None, None)
+    )
+    monkeypatch.setattr(mtlsh, "mt_lsh_budget_curve", lambda *a, **kw: Missing())
+    try:
+        got = sorted(map(tuple, mt_lsh_ann_topk(spark, sf_dir).collect()))
+        with open(os.path.join(root, "mtlsh_serving._budget.json")) as fh:
+            assert json.load(fh)["n_probe_buckets"] is None
+        emb = load_table(spark, sf_dir, "embeddings")
+        want = exact_knn(_query_set(spark, sf_dir), emb, k=10, item_id="vec_id")
+        assert got == sorted(
+            map(tuple, want.select(
+                "query_id", "rank", "item_id", F.round("dist", 4)
+            ).collect())
+        )
+        assert not os.path.exists(os.path.join(root, "mtlsh_index"))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 class TestBpeTopMerges:

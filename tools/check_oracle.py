@@ -8,10 +8,16 @@ With SPARK_GRAFT_GATE_OUT=<path> (e.g. GATE_r07.json) the per-query
 verdicts are also written as a committed JSON artifact — the full-coverage
 complement to the driver's 50-slot random window (VERDICT r05/r06 ask):
 every oracled query verified every round, not a sample.
+
+Every entry whose Spark side ran, rows-only entries included, also prints
+and records ``sha256``: a digest of its order-insensitive rows
+(``row_digest``). Two gate files of the same SF then diff entry by entry,
+which is how a refactor shows that the registry's rows did not move.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -46,6 +52,13 @@ def canon(rows, cols):
     return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
+def row_digest(rows, cols) -> str:
+    """sha256 over the column names and ``canon(rows, cols)``: equal for
+    any row order and any column order."""
+    body = repr((sorted(cols), canon(rows, cols)))
+    return hashlib.sha256(body.encode()).hexdigest()
+
+
 def main(names: list[str]) -> int:
     import __spark_entry__ as entrymod
     from vectordb_acc_and_speed_exp_spark.session import get_spark
@@ -67,8 +80,13 @@ def main(names: list[str]) -> int:
     failed = []
     verdicts: dict[str, dict] = {}
 
-    def record(name: str, status: str, rows: int | None = None, note: str = ""):
+    def record(
+        name: str, status: str, rows: int | None = None, note: str = "",
+        sha256: str | None = None,
+    ):
         verdicts[name] = {"status": status, "rows": rows, "note": note}
+        if sha256 is not None:
+            verdicts[name]["sha256"] = sha256
 
     for name in targets:
         if name not in qs:
@@ -89,9 +107,10 @@ def main(names: list[str]) -> int:
             failed.append(name)
             record(name, "spark_error")
             continue
+        digest = row_digest(srows, scols)
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows)")
-            record(name, "rows_only", len(srows))
+            print(f"ok   {name}: rows-only ({len(srows)} rows) sha256={digest}")
+            record(name, "rows_only", len(srows), sha256=digest)
             continue
         try:
             rel = con.sql(oracles[name])
@@ -101,27 +120,27 @@ def main(names: list[str]) -> int:
             print(f"FAIL {name}: duckdb error")
             traceback.print_exc()
             failed.append(name)
-            record(name, "duckdb_error")
+            record(name, "duckdb_error", sha256=digest)
             continue
         if sorted(scols) != sorted(dcols):
             print(f"FAIL {name}: cols spark={sorted(scols)} duck={sorted(dcols)}")
             failed.append(name)
-            record(name, "schema_mismatch")
+            record(name, "schema_mismatch", sha256=digest)
             continue
         cs, cd = canon(srows, scols), canon(drows, dcols)
         if len(cs) != len(cd):
             print(f"FAIL {name}: rowcount spark={len(cs)} duck={len(cd)}")
             failed.append(name)
-            record(name, "rowcount_mismatch", len(cs))
+            record(name, "rowcount_mismatch", len(cs), sha256=digest)
             continue
         if cs != cd:
             diffs = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
             print(f"FAIL {name}: value mismatch; first diffs: {diffs}")
             failed.append(name)
-            record(name, "value_mismatch", len(cs))
+            record(name, "value_mismatch", len(cs), sha256=digest)
             continue
-        print(f"PASS {name} ({len(cs)} rows)")
-        record(name, "pass", len(cs))
+        print(f"PASS {name} ({len(cs)} rows) sha256={digest}")
+        record(name, "pass", len(cs), sha256=digest)
     print(f"\n{len(targets) - len(failed)}/{len(targets)} passed")
     if GATE_OUT:
         oracled = [n for n in targets if n in oracles]

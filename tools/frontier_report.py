@@ -52,9 +52,7 @@ def main() -> int:
         lsh_ann,
     )
     from vectordb_acc_and_speed_exp_spark.operators.bq import (
-        bq_encode,
         bq_search_rerank,
-        bq_train,
         ivfbq_search,
     )
     from vectordb_acc_and_speed_exp_spark.operators.graphann import (
@@ -77,15 +75,12 @@ def main() -> int:
     from vectordb_acc_and_speed_exp_spark.queries.pipeline import (
         _composed_serving,
         _flat_serving,
+        _flat_codes,
         _get_or_build_cell_graph,
+        _get_or_build_codes,
         _get_or_build_graph,
         _get_or_build_ivf,
-        _get_or_build_ivfbq,
-        _get_or_build_ivfpq,
-        _get_or_build_ivfsq,
         _get_or_build_mtlsh_index,
-        _get_or_build_pq,
-        _get_or_build_sq,
         _ivf_serving,
         _lsh_serving,
         _mtlsh_serving,
@@ -106,13 +101,16 @@ def main() -> int:
     }
 
     corpus_path, cents = _get_or_build_ivf(spark, sf_dir)
-    enc_pq, books = _get_or_build_pq(spark, sf_dir)
-    enc_sq, vmin, scale = _get_or_build_sq(spark, sf_dir)
-    bsums, bn = bq_train(emb, item_vec="embedding", dim=64)
-    enc_bq = bq_encode(emb, bsums, bn, item_id="vec_id")
-    sq_codes, sq_corpus, sq_cents, svmin, sscale = _get_or_build_ivfsq(spark, sf_dir)
-    pq_codes, pq_corpus, pq_cents, pbooks = _get_or_build_ivfpq(spark, sf_dir)
-    bq_codes, bq_corpus, bq_cents, cbsums, cbn = _get_or_build_ivfbq(spark, sf_dir)
+    # the composed tables reuse the flat params
+    enc_pq, pq_p = _flat_codes(spark, sf_dir, "pq")
+    enc_sq, sq_p = _flat_codes(spark, sf_dir, "sq")
+    enc_bq, bq_p = _flat_codes(spark, sf_dir, "bq")
+    books, vmin, scale = pq_p["books"], sq_p["vmin"], sq_p["scale"]
+    bsums, bn = bq_p["sums"], bq_p["n"]
+    sq_codes, pq_codes, bq_codes = (
+        _get_or_build_codes(spark, sf_dir, f, ivf=True)[0]
+        for f in ("sq", "pq", "bq")
+    )
     gpath, gcents = _get_or_build_cell_graph(spark, sf_dir)
     plain_gpath = _get_or_build_graph(spark, sf_dir)
     mt_idx = _get_or_build_mtlsh_index(spark, sf_dir)
@@ -153,21 +151,21 @@ def main() -> int:
         points.append((
             "ivfsq", f"n_probe={p},shortlist=400",
             lambda p=p: ivfsq_search(
-                qs, spark, sq_codes, sq_corpus, sq_cents, svmin, sscale,
+                qs, spark, sq_codes, corpus_path, cents, vmin, scale,
                 k=10, n_probe=p, shortlist=400, item_id="vec_id",
             ),
         ))
         points.append((
             "ivfpq", f"n_probe={p},shortlist=400",
             lambda p=p: ivfpq_search(
-                qs, spark, pq_codes, pq_corpus, pq_cents, pbooks,
+                qs, spark, pq_codes, corpus_path, cents, books,
                 k=10, n_probe=p, shortlist=400, item_id="vec_id",
             ),
         ))
         points.append((
             "ivfbq", f"n_probe={p},shortlist=400",
             lambda p=p: ivfbq_search(
-                qs, spark, bq_codes, bq_corpus, bq_cents, cbsums, cbn,
+                qs, spark, bq_codes, corpus_path, cents, bsums, bn,
                 k=10, n_probe=p, shortlist=400, item_id="vec_id",
             ),
         ))

@@ -116,7 +116,6 @@ def compute_recalls_calib(spark, sf_dir: str, n_sample: int = 32) -> dict:
     )
     from vectordb_acc_and_speed_exp_spark.operators.bq import (
         bq_search_rerank,
-        bq_train,
         ivfbq_search,
     )
     from vectordb_acc_and_speed_exp_spark.operators.graphann import (
@@ -141,15 +140,12 @@ def compute_recalls_calib(spark, sf_dir: str, n_sample: int = 32) -> dict:
     from vectordb_acc_and_speed_exp_spark.queries.pipeline import (
         _composed_serving,
         _flat_serving,
+        _flat_codes,
         _get_or_build_cell_graph,
+        _get_or_build_codes,
         _get_or_build_graph,
         _get_or_build_ivf,
-        _get_or_build_ivfbq,
-        _get_or_build_ivfpq,
-        _get_or_build_ivfsq,
         _get_or_build_mtlsh_index,
-        _get_or_build_pq,
-        _get_or_build_sq,
         _ivf_serving,
         _lsh_serving,
         _mtlsh_serving,
@@ -165,12 +161,16 @@ def compute_recalls_calib(spark, sf_dir: str, n_sample: int = 32) -> dict:
     gt.count()
 
     corpus_path, cents = _get_or_build_ivf(spark, sf_dir)
-    enc_pq, books = _get_or_build_pq(spark, sf_dir)
-    enc_sq, vmin, scale = _get_or_build_sq(spark, sf_dir)
-    bsums, bn = bq_train(emb, item_vec="embedding", dim=64)
-    sq_c, sq_cp, sq_ce, svmin, sscale = _get_or_build_ivfsq(spark, sf_dir)
-    pq_c, pq_cp, pq_ce, pbooks = _get_or_build_ivfpq(spark, sf_dir)
-    bq_c, bq_cp, bq_ce, cbsums, cbn = _get_or_build_ivfbq(spark, sf_dir)
+    # the composed tables reuse the flat params
+    enc_pq, pq_p = _flat_codes(spark, sf_dir, "pq")
+    enc_sq, sq_p = _flat_codes(spark, sf_dir, "sq")
+    enc_bq, bq_p = _flat_codes(spark, sf_dir, "bq")
+    books, vmin, scale = pq_p["books"], sq_p["vmin"], sq_p["scale"]
+    bsums, bn = bq_p["sums"], bq_p["n"]
+    sq_c, pq_c, bq_c = (
+        _get_or_build_codes(spark, sf_dir, f, ivf=True)[0]
+        for f in ("sq", "pq", "bq")
+    )
     gpath = _get_or_build_graph(spark, sf_dir)
     cgpath, gcents = _get_or_build_cell_graph(spark, sf_dir)
     mt_idx = _get_or_build_mtlsh_index(spark, sf_dir)
@@ -188,7 +188,10 @@ def compute_recalls_calib(spark, sf_dir: str, n_sample: int = 32) -> dict:
         "lsh_tuned": lambda: lsh_ann(
             qs, emb, k=10, n_probe_bits=lsh_b, item_id="vec_id"
         ),
-        "mtlsh_tuned": lambda: mt_lsh_ann_pruned(
+        # a budget miss reroutes to the exact scan, as the entry does
+        "mtlsh_tuned": lambda: exact_knn(
+            qs, emb, k=10, item_id="vec_id"
+        ) if mt_b is None else mt_lsh_ann_pruned(
             qs, spark, mt_idx, emb, k=10, n_probe_buckets=mt_b,
             item_id="vec_id",
         ),
@@ -204,20 +207,21 @@ def compute_recalls_calib(spark, sf_dir: str, n_sample: int = 32) -> dict:
             item_id="vec_id",
         ),
         "bq_tuned": lambda: bq_search_rerank(
-            qs, emb, bsums, bn, k=10, shortlist=bq_b, item_id="vec_id"
+            qs, emb, bsums, bn, k=10, shortlist=bq_b, item_id="vec_id",
+            encoded=enc_bq,
         ),
         "ivfsq_tuned": lambda: ivfsq_search(
-            qs, spark, sq_c, sq_cp, sq_ce, svmin, sscale, k=10,
+            qs, spark, sq_c, corpus_path, cents, vmin, scale, k=10,
             n_probe=isq_b["n_probe"], shortlist=isq_b["shortlist"],
             item_id="vec_id",
         ),
         "ivfpq_tuned": lambda: ivfpq_search(
-            qs, spark, pq_c, pq_cp, pq_ce, pbooks, k=10,
+            qs, spark, pq_c, corpus_path, cents, books, k=10,
             n_probe=ipq_b["n_probe"], shortlist=ipq_b["shortlist"],
             item_id="vec_id",
         ),
         "ivfbq_tuned": lambda: ivfbq_search(
-            qs, spark, bq_c, bq_cp, bq_ce, cbsums, cbn, k=10,
+            qs, spark, bq_c, corpus_path, cents, bsums, bn, k=10,
             n_probe=ibq_b["n_probe"], shortlist=ibq_b["shortlist"],
             item_id="vec_id",
         ),
@@ -251,7 +255,6 @@ def compute_recalls_calib_k25(spark, sf_dir: str, n_sample: int = 32) -> dict:
     )
     from vectordb_acc_and_speed_exp_spark.operators.bq import (
         bq_search_rerank,
-        bq_train,
         ivfbq_search,
     )
     from vectordb_acc_and_speed_exp_spark.operators.graphann import (
@@ -280,15 +283,12 @@ def compute_recalls_calib_k25(spark, sf_dir: str, n_sample: int = 32) -> dict:
     from vectordb_acc_and_speed_exp_spark.queries.pipeline import (
         _composed_serving,
         _flat_serving,
+        _flat_codes,
         _get_or_build_cell_graph,
+        _get_or_build_codes,
         _get_or_build_graph,
         _get_or_build_ivf,
-        _get_or_build_ivfbq,
-        _get_or_build_ivfpq,
-        _get_or_build_ivfsq,
         _get_or_build_mtlsh_index,
-        _get_or_build_pq,
-        _get_or_build_sq,
         _ivf_serving,
         _lsh_serving,
         _mtlsh_serving,
@@ -311,12 +311,16 @@ def compute_recalls_calib_k25(spark, sf_dir: str, n_sample: int = 32) -> dict:
         return round(float(r), 4)
 
     corpus_path, cents = _get_or_build_ivf(spark, sf_dir)
-    enc_pq, books = _get_or_build_pq(spark, sf_dir)
-    enc_sq, vmin, scale = _get_or_build_sq(spark, sf_dir)
-    bsums, bn = bq_train(emb, item_vec="embedding", dim=64)
-    sq_c, sq_cp, sq_ce, svmin, sscale = _get_or_build_ivfsq(spark, sf_dir)
-    pq_c, pq_cp, pq_ce, pbooks = _get_or_build_ivfpq(spark, sf_dir)
-    bq_c, bq_cp, bq_ce, cbsums, cbn = _get_or_build_ivfbq(spark, sf_dir)
+    # the composed tables reuse the flat params
+    enc_pq, pq_p = _flat_codes(spark, sf_dir, "pq")
+    enc_sq, sq_p = _flat_codes(spark, sf_dir, "sq")
+    enc_bq, bq_p = _flat_codes(spark, sf_dir, "bq")
+    books, vmin, scale = pq_p["books"], sq_p["vmin"], sq_p["scale"]
+    bsums, bn = bq_p["sums"], bq_p["n"]
+    sq_c, pq_c, bq_c = (
+        _get_or_build_codes(spark, sf_dir, f, ivf=True)[0]
+        for f in ("sq", "pq", "bq")
+    )
     gpath = _get_or_build_graph(spark, sf_dir)
     cgpath, gcents = _get_or_build_cell_graph(spark, sf_dir)
     mt_idx = _get_or_build_mtlsh_index(spark, sf_dir)
@@ -334,7 +338,10 @@ def compute_recalls_calib_k25(spark, sf_dir: str, n_sample: int = 32) -> dict:
         "lsh_tuned": lambda: lsh_ann(
             qs, emb, k=k, n_probe_bits=lsh_b, item_id="vec_id"
         ),
-        "mtlsh_tuned": lambda: mt_lsh_ann_pruned(
+        # a budget miss reroutes to the exact scan, as the entry does
+        "mtlsh_tuned": lambda: exact_knn(
+            qs, emb, k=k, item_id="vec_id"
+        ) if mt_b is None else mt_lsh_ann_pruned(
             qs, spark, mt_idx, emb, k=k, n_probe_buckets=mt_b,
             item_id="vec_id",
         ),
@@ -350,20 +357,21 @@ def compute_recalls_calib_k25(spark, sf_dir: str, n_sample: int = 32) -> dict:
             item_id="vec_id",
         ),
         "bq_tuned": lambda: bq_search_rerank(
-            qs, emb, bsums, bn, k=k, shortlist=bq_b, item_id="vec_id"
+            qs, emb, bsums, bn, k=k, shortlist=bq_b, item_id="vec_id",
+            encoded=enc_bq,
         ),
         "ivfsq_tuned": lambda: ivfsq_search(
-            qs, spark, sq_c, sq_cp, sq_ce, svmin, sscale, k=k,
+            qs, spark, sq_c, corpus_path, cents, vmin, scale, k=k,
             n_probe=isq_b["n_probe"], shortlist=isq_b["shortlist"],
             item_id="vec_id",
         ),
         "ivfpq_tuned": lambda: ivfpq_search(
-            qs, spark, pq_c, pq_cp, pq_ce, pbooks, k=k,
+            qs, spark, pq_c, corpus_path, cents, books, k=k,
             n_probe=ipq_b["n_probe"], shortlist=ipq_b["shortlist"],
             item_id="vec_id",
         ),
         "ivfbq_tuned": lambda: ivfbq_search(
-            qs, spark, bq_c, bq_cp, bq_ce, cbsums, cbn, k=k,
+            qs, spark, bq_c, corpus_path, cents, bsums, bn, k=k,
             n_probe=ibq_b["n_probe"], shortlist=ibq_b["shortlist"],
             item_id="vec_id",
         ),
@@ -498,7 +506,6 @@ def compute_floor_recalls(spark, sf_dir: str) -> dict[str, float]:
     from vectordb_acc_and_speed_exp_spark.operators.ann import ivf_ann_pruned
     from vectordb_acc_and_speed_exp_spark.operators.bq import (
         bq_search_rerank,
-        bq_train,
         ivfbq_search,
     )
     from vectordb_acc_and_speed_exp_spark.operators.graphann import (
@@ -510,12 +517,10 @@ def compute_floor_recalls(spark, sf_dir: str) -> dict[str, float]:
     )
     from vectordb_acc_and_speed_exp_spark.operators.sq import ivfsq_search
     from vectordb_acc_and_speed_exp_spark.queries.pipeline import (
+        _flat_codes,
         _get_or_build_cell_graph,
+        _get_or_build_codes,
         _get_or_build_ivf,
-        _get_or_build_ivfbq,
-        _get_or_build_ivfpq,
-        _get_or_build_ivfsq,
-        _get_or_build_pq,
     )
 
     emb, qs, gt = _gt_and_queries(spark, sf_dir)
@@ -525,35 +530,40 @@ def compute_floor_recalls(spark, sf_dir: str) -> dict[str, float]:
     out["ivf_8of16"] = _recall_of(
         gt, ivf_ann_pruned(qs, spark, cp, cents, k=10, n_probe=8, item_id="vec_id")
     )
-    enc, books = _get_or_build_pq(spark, sf_dir)
+    enc, pq_p = _flat_codes(spark, sf_dir, "pq")
     out["pq_short400"] = _recall_of(
-        gt, pq_search_rerank(qs, emb, enc, books, k=10, shortlist=400, item_id="vec_id")
+        gt, pq_search_rerank(
+            qs, emb, enc, pq_p["books"], k=10, shortlist=400, item_id="vec_id"
+        )
     )
-    sums, n = bq_train(emb, item_vec="embedding", dim=64)
+    enc, bq_p = _flat_codes(spark, sf_dir, "bq")
     out["bq_short400"] = _recall_of(
-        gt, bq_search_rerank(qs, emb, sums, n, k=10, shortlist=400, item_id="vec_id")
+        gt, bq_search_rerank(
+            qs, emb, bq_p["sums"], bq_p["n"], k=10, shortlist=400,
+            item_id="vec_id", encoded=enc,
+        )
     )
-    codes_path, corpus_path, cents, vmin, scale = _get_or_build_ivfsq(spark, sf_dir)
+    codes_path, p = _get_or_build_codes(spark, sf_dir, "sq", ivf=True)
     out["ivfsq_8probe"] = _recall_of(
         gt,
         ivfsq_search(
-            qs, spark, codes_path, corpus_path, cents, vmin, scale,
+            qs, spark, codes_path, cp, cents, p["vmin"], p["scale"],
             k=10, n_probe=8, shortlist=400, item_id="vec_id",
         ),
     )
-    codes_path, corpus_path, cents, pbooks = _get_or_build_ivfpq(spark, sf_dir)
+    codes_path, p = _get_or_build_codes(spark, sf_dir, "pq", ivf=True)
     out["ivfpq_8probe"] = _recall_of(
         gt,
         ivfpq_search(
-            qs, spark, codes_path, corpus_path, cents, pbooks,
+            qs, spark, codes_path, cp, cents, p["books"],
             k=10, n_probe=8, shortlist=400, item_id="vec_id",
         ),
     )
-    codes_path, corpus_path, cents, bsums, bn = _get_or_build_ivfbq(spark, sf_dir)
+    codes_path, p = _get_or_build_codes(spark, sf_dir, "bq", ivf=True)
     out["ivfbq_8probe"] = _recall_of(
         gt,
         ivfbq_search(
-            qs, spark, codes_path, corpus_path, cents, bsums, bn,
+            qs, spark, codes_path, cp, cents, p["sums"], p["n"],
             k=10, n_probe=8, shortlist=400, item_id="vec_id",
         ),
     )

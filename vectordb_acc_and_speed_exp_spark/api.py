@@ -18,8 +18,8 @@ Query modes map to the engine's search operators:
     auto    operators.filtered             (where= chooser: EP8's measured
             exact-vs-widened-IVF rule)
 
-The six compressed modes are one family table (``_quantizers``) over one
-operator skeleton, operators/quantized.py: approximate scan →
+The six compressed modes are one family table (``_quantizers``, in
+operators/quantized.py) over one operator skeleton there: approximate scan →
 top-``shortlist`` by (adist, item_id) → exact L2 re-rank → top-k by
 (dist, item_id). A mode is a quantizer family in a layout:
 
@@ -67,31 +67,7 @@ from .operators.probetune import (
     choose_budget,
     curve_is_stale,
 )
-
-
-class _Quantizer(NamedTuple):
-    """What the facade needs of one compressed family beyond the shared
-    skeleton (operators/quantized.py); ``params`` is a dict.
-
-    - ``fit(corpus, dim)`` trains the frozen params;
-    - ``encode(df, params, passthrough=(), qerr=False)`` emits the codes,
-      plus each row's reconstruction error as ``_qerr`` when ``qerr``;
-    - ``baseline(corpus, params, dim)`` is the EP13 drift baseline
-      (None = the in-sample mean of ``_qerr``);
-    - ``to_meta(params)`` gives the JSON sidecar and the ``.npy`` array
-      (or None), ``from_meta(meta, npy_path)`` reads them back;
-    - ``can_recon(params)``: the params carry what ``_qerr`` needs;
-    - ``qerr_in_codes``: the FLAT code table keeps the ``_qerr`` column.
-    """
-
-    fit: Callable
-    encode: Callable
-    to_meta: Callable
-    from_meta: Callable
-    scorer: Callable
-    baseline: Callable | None = None
-    can_recon: Callable = lambda p: True
-    qerr_in_codes: bool = False
+from .operators.quantized import _quantizers, load_params, write_code_table
 
 
 _QUANT_FAMILIES = ("bq", "pq", "sq")
@@ -100,108 +76,6 @@ _COMPOSED = tuple(f"ivf{f}" for f in _QUANT_FAMILIES)
 # budget that guarantees an exact answer (None: no finite budget of the
 # index does, so a miss or a target >= 1 reroutes to the exact scan)
 _FULL_BUDGET = {"lsh": LSH_N_PLANES, "mtlsh": None, "graph": None}
-
-
-@functools.cache
-def _quantizers() -> dict[str, _Quantizer]:
-    """The bq / pq / sq family table. Imports stay lazy: the exact and
-    graph routes never load the quantizer modules."""
-    import numpy as np
-
-    from .operators import bq, pq, sq
-
-    def with_recon(encode, recon):
-        # codegen families: the recon column rides the encode as a
-        # passthrough, so one projection yields codes and error
-        def enc(df, p, passthrough=(), qerr=False):
-            if qerr:
-                df = df.withColumn("_qerr", recon(F.col("embedding"), p))
-                passthrough = (*passthrough, "_qerr")
-            return encode(df, p, passthrough)
-
-        return enc
-
-    def bq_fit(corpus, dim):
-        sums, n = bq.bq_train(corpus, item_vec="embedding", dim=dim)
-        lo, hi = bq.bq_side_means(corpus, sums, n, item_vec="embedding")
-        return {"sums": sums, "n": n, "lo": lo, "hi": hi}
-
-    def pq_fit(corpus, dim):
-        m = 8 if dim % 8 == 0 else 4
-        return {"books": pq.pq_train(corpus, item_vec="embedding", m=m, k=16),
-                "m": m}
-
-    def sq_fit(corpus, dim):
-        vmin, scale = sq.sq_train(corpus, item_vec="embedding", dim=dim)
-        return {"vmin": vmin, "scale": scale}
-
-    def floats(a):
-        return [float(x) for x in a]
-
-    def array_or_none(m, key):
-        return np.array(m[key]) if key in m else None
-
-    return {
-        "bq": _Quantizer(
-            fit=bq_fit,
-            encode=with_recon(
-                lambda df, p, pt: bq.bq_encode(
-                    df, p["sums"], p["n"], item_id="id", passthrough=pt
-                ),
-                lambda v, p: bq.bq_recon_qerr(
-                    v, p["sums"], p["n"], p["lo"], p["hi"]
-                ),
-            ),
-            to_meta=lambda p: (
-                {"sums": [int(x) for x in p["sums"]], "n": p["n"],
-                 "lo": floats(p["lo"]), "hi": floats(p["hi"])},
-                None,
-            ),
-            from_meta=lambda m, npy: {
-                "sums": np.array(m["sums"], dtype=np.int64),
-                "n": int(m["n"]),
-                "lo": array_or_none(m, "lo"),
-                "hi": array_or_none(m, "hi"),
-            },
-            scorer=lambda p: bq.bq_scorer(p["sums"], p["n"]),
-            # sidecars written before the side means existed cannot
-            # reconstruct, so they record no drift
-            can_recon=lambda p: p["lo"] is not None,
-        ),
-        "pq": _Quantizer(
-            fit=pq_fit,
-            encode=lambda df, p, passthrough=(), qerr=False: pq.pq_encode(
-                df, p["books"], item_id="id", passthrough=passthrough,
-                keep_qerr="_qerr" if qerr else None,
-            ),
-            to_meta=lambda p: ({"m": p["m"], "k": 16}, p["books"]),
-            from_meta=lambda m, npy: {"books": np.load(npy)},
-            scorer=lambda p: pq.pq_scorer(p["books"]),
-            qerr_in_codes=True,
-        ),
-        "sq": _Quantizer(
-            fit=sq_fit,
-            encode=with_recon(
-                lambda df, p, pt: sq.sq_encode(
-                    df, p["vmin"], p["scale"], item_id="id", passthrough=pt
-                ),
-                lambda v, p: sq.sq_recon_qerr(v, p["vmin"], p["scale"]),
-            ),
-            to_meta=lambda p: (
-                {"vmin": floats(p["vmin"]), "scale": floats(p["scale"])},
-                None,
-            ),
-            from_meta=lambda m, npy: {
-                "vmin": np.array(m["vmin"], dtype=np.float64),
-                "scale": np.array(m["scale"], dtype=np.float64),
-            },
-            scorer=lambda p: sq.sq_scorer(p["vmin"], p["scale"]),
-            # OUT-OF-SAMPLE baseline (sq_holdout_qerr): training rows
-            # never clamp under params fit on exactly them, so an
-            # in-sample baseline fires on in-distribution appends
-            baseline=lambda corpus, p, dim: sq.sq_holdout_qerr(corpus, dim),
-        ),
-    }
 
 
 class VectorStore:
@@ -830,7 +704,7 @@ class VectorStore:
             _, meta, codes, npy, _ = self._qpaths(name, fam, ivf=True)
             if os.path.exists(meta):
                 enc = self._encode_batch(
-                    q, self._load_params(q, meta, npy), assigned, codes,
+                    q, load_params(q, meta, npy), assigned, codes,
                     passthrough=("cell",),
                 ).drop("_qerr")
                 (
@@ -908,7 +782,7 @@ class VectorStore:
                 _, meta, codes, npy, _ = self._qpaths(name, fam, ivf=True)
                 if not os.path.exists(meta):
                     continue
-                p = self._load_params(q, meta, npy)
+                p = load_params(q, meta, npy)
                 ivf_codes_upsert(
                     self.spark, corpus_path, codes,
                     lambda df, q=q, p=p: q.encode(df, p, ("cell",)), cells,
@@ -972,7 +846,7 @@ class VectorStore:
             ):
                 continue
             enc = self._encode_batch(
-                q, self._load_params(q, meta, npy), docs, root
+                q, load_params(q, meta, npy), docs, root
             )
             # roll back a crashed auto-compaction BEFORE appending: an
             # append into the (absent) swap window would create a codes
@@ -1019,11 +893,6 @@ class VectorStore:
                 os.path.join(root, "codes"), os.path.join(root, "books.npy"),
                 root)
 
-    @staticmethod
-    def _load_params(q: _Quantizer, meta: str, npy: str) -> dict:
-        with open(meta) as f:
-            return q.from_meta(json.load(f), npy)
-
     def _ensure_codes(self, name: str, fam: str, ivf: bool = False):
         """Build (or reuse) a family's persisted code table + frozen params
         — the serving shape, so a compressed query scans codes instead of
@@ -1035,11 +904,6 @@ class VectorStore:
         the meta sidecar is its commit point (written last). Returns
         (codes_path, params, ivf_corpus_path, centroids) — the last two
         None for flat tables."""
-        import numpy as np
-
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
-        from .operators.quantized import write_ivf_codes
-
         q = _quantizers()[fam]
         root, meta, codes, npy, drift_root = self._qpaths(name, fam, ivf)
         corpus_path = cents = None
@@ -1054,30 +918,15 @@ class VectorStore:
             corpus = (
                 self.spark.read.parquet(corpus_path) if ivf else self.get(name)
             )
-            p = q.fit(corpus, self.dim)
             os.makedirs(root, exist_ok=True)
-            keep_qerr = q.qerr_in_codes and not ivf
-            enc = q.encode(corpus, p, ("cell",) if ivf else (), keep_qerr)
-            if ivf:
-                write_ivf_codes(enc, codes)
-            else:
-                enc.write.mode("overwrite").parquet(codes)
-            if keep_qerr:  # the encode already measured every row
-                base = mean_coarse_qerr(self.spark.read.parquet(codes))
-            elif q.baseline is not None:
-                base = q.baseline(corpus, p, self.dim)
-            else:
-                base = mean_coarse_qerr(q.encode(corpus, p, (), True))
-            write_drift_baseline(drift_root, *base)
-            js, arr = q.to_meta(p)
-            if arr is not None:
-                np.save(npy, arr)
-            with open(meta, "w") as f:
-                json.dump(js, f)
-        return codes, self._load_params(q, meta, npy), corpus_path, cents
+            write_code_table(
+                q, q.fit(corpus, self.dim), corpus, codes, meta, npy,
+                drift_root, self.dim, ivf,
+            )
+        return codes, load_params(q, meta, npy), corpus_path, cents
 
     def _encode_batch(
-        self, q: _Quantizer, p: dict, df: DataFrame, drift_root: str,
+        self, q, p: dict, df: DataFrame, drift_root: str,
         passthrough: tuple[str, ...] = (),
     ) -> DataFrame:
         """Encode a write batch with FROZEN params. When the artifact has a
@@ -1177,7 +1026,9 @@ class VectorStore:
         stem, ext = os.path.splitext(base)
         return f"{stem}_k{k}{ext}"
 
-    def _curve(self, name: str, mode: str, k: int = 10) -> dict:
+    def _curve(
+        self, name: str, mode: str, k: int = 10, n_corpus: int | None = None
+    ) -> dict:
         """Measured recall@k-vs-budget curve of ``mode``, a key of
         ``_curve_kinds()``: "probe" (IVF probes), "bq"/"pq"/"sq" (flat
         re-rank shortlists), "lsh" (probe bits), "mtlsh" (bucket budget),
@@ -1193,13 +1044,14 @@ class VectorStore:
         drift or no drift), else measure and publish. Rebuilds (writes,
         the drift-triggered retrain) drop the sidecars with their
         artifact directories; ``_drop_lsh_calib`` drops the
-        artifact-less lsh curve."""
+        artifact-less lsh curve. ``n_corpus``: the collection's row
+        count when the caller already has it."""
         from .io.commitproto import publish_marker
         from .operators.probetune import read_curve_meta
 
         kind = _curve_kinds()[mode]
         path = os.path.join(kind.root(self, name), kind.fname(k))
-        n = self._collection_nrows(name)
+        n = self._collection_nrows(name) if n_corpus is None else n_corpus
         read = path
         if kind.legacy is not None and not os.path.exists(path):
             read = kind.legacy(self, name, k) or path
@@ -1215,14 +1067,17 @@ class VectorStore:
         return curve
 
     def _choose(
-        self, name: str, mode: str, k: int, target: float, full: int | None
+        self, name: str, mode: str, k: int, target: float, full: int | None,
+        n_corpus: int | None = None,
     ) -> int | None:
         """probetune.choose_budget over ``mode``'s curve. A target >= 1
         reads no curve: only ``full`` guarantees an exact answer, so the
         guaranteed-exact configuration never pays a calibration."""
         if target >= 1.0:
             return full
-        return choose_budget(self._curve(name, mode, k), target, full)
+        return choose_budget(
+            self._curve(name, mode, k, n_corpus), target, full
+        )
 
     def _measure_probe(self, name: str, k: int) -> dict:
         """Recall-vs-probes of the collection's IVF layout (probetune's
@@ -1502,7 +1357,8 @@ class VectorStore:
         return max(k, s_up)
 
     def _ensure_composed_budget(
-        self, name: str, mode: str, target: float, k: int = 10
+        self, name: str, mode: str, target: float, k: int = 10,
+        n_corpus: int | None = None,
     ) -> dict:
         """Measured joint (n_probe, shortlist) for mode in {ivfbq, ivfpq,
         ivfsq} at the given recall target AND requested k — probetune's
@@ -1528,11 +1384,11 @@ class VectorStore:
         # CALIB staleness already retires pre-k sidecars)
         key = f"{target:.2f}" if k == 10 else f"{target:.2f}@k{k}"
         meta = read_curve_meta(root, fname)
-        n = self._collection_nrows(name)
+        n = self._collection_nrows(name) if n_corpus is None else n_corpus
         stale = curve_is_stale(meta, n)
         if not stale and key in meta.get("targets", {}):
             return meta["targets"][key]
-        probe_curve = self._curve(name, "probe", k)
+        probe_curve = self._curve(name, "probe", k, n)
         fam = mode.removeprefix("ivf")
         codes, p, _, _ = self._ensure_codes(name, fam, ivf=True)
         b = composed_serving_budget(
@@ -1559,7 +1415,7 @@ class VectorStore:
 
     def _resolve_shortlist(
         self, name: str, fam: str, k: int, shortlist: int | None,
-        target: float = DEFAULT_TARGET_RECALL,
+        target: float = DEFAULT_TARGET_RECALL, n_corpus: int | None = None,
     ) -> int:
         """Serving shortlist for a flat code family: the caller's explicit
         value, else the smallest calibrated budget meeting ``target`` —
@@ -1572,14 +1428,13 @@ class VectorStore:
         re-rank pool never returns < k rows), not the certification."""
         if shortlist is not None:
             return shortlist
-        return max(k, self._choose(
-            name, fam, k, target, self._collection_nrows(name)
-        ))
+        n = self._collection_nrows(name) if n_corpus is None else n_corpus
+        return max(k, self._choose(name, fam, k, target, n, n))
 
     def _resolve_composed(
         self, name: str, mode: str, n_probe: int | None,
         shortlist: int | None, k: int = 10,
-        target: float = DEFAULT_TARGET_RECALL,
+        target: float = DEFAULT_TARGET_RECALL, n_corpus: int | None = None,
     ) -> tuple[int, int]:
         """Serving (n_probe, shortlist) for ivfbq/ivfpq/ivfsq: explicit
         values win; anything unspecified comes from the measured joint
@@ -1589,11 +1444,12 @@ class VectorStore:
         at k (ADVICE r09), a structural guard like the flat one."""
         if n_probe is not None and shortlist is not None:
             return n_probe, shortlist
+        n = self._collection_nrows(name) if n_corpus is None else n_corpus
         if target >= 1.0:
             b = {"n_probe": self._ensure_ivf_index(name)[1].count(),
-                 "shortlist": self._collection_nrows(name)}
+                 "shortlist": n}
         else:
-            b = self._ensure_composed_budget(name, mode, target, k=k)
+            b = self._ensure_composed_budget(name, mode, target, k, n)
         return (
             n_probe if n_probe is not None else b["n_probe"],
             shortlist if shortlist is not None else max(k, b["shortlist"]),
@@ -2317,7 +2173,7 @@ class VectorStore:
         n_corpus = self._collection_nrows(name)
         if fam != mode:
             n_probe, shortlist = self._resolve_composed(
-                name, mode, n_probe, shortlist, k=k
+                name, mode, n_probe, shortlist, k=k, n_corpus=n_corpus
             )
             # the bq scorer's hamming column stays internal: query()
             # returns the four documented columns on every mode
@@ -2334,7 +2190,9 @@ class VectorStore:
             )
         return shortlist_search(
             qdf, encoded, corpus, scorer, k,
-            self._resolve_shortlist(name, fam, k, shortlist),
+            self._resolve_shortlist(
+                name, fam, k, shortlist, n_corpus=n_corpus
+            ),
             item_id="id", n_corpus=n_corpus,
         ).select("query_id", "rank", "item_id", "dist")
 

@@ -74,23 +74,3 @@ def exact_knn(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "item_id", "dist")
     )
-
-
-def knn_join(
-    left: DataFrame,
-    right: DataFrame,
-    k: int,
-    metric: str = "l2",
-    left_id: str = "left_id",
-    left_vec: str = "left_vec",
-    right_id: str = "right_id",
-    right_vec: str = "right_vec",
-) -> DataFrame:
-    """k-NN join: for every left row, its k nearest right rows. The left
-    side is broadcast when small; for large-x-large use the ANN paths in
-    ``operators.ann`` instead (a true large kNN join is quadratic)."""
-    return exact_knn(
-        left, right, k=k, metric=metric,
-        query_id=left_id, query_vec=left_vec,
-        item_id=right_id, item_vec=right_vec,
-    )

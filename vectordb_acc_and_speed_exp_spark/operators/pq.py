@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from .quantized import (
     Scorer,
     approx_topk,
-    ivf_codes_upsert,
     ivf_shortlist_search,
     kernel_scorer,
     shortlist_search,
@@ -196,19 +195,6 @@ def write_ivfpq_codes(
     n_probe/n_cells of the corpus x ~700x fewer bytes per row before any
     float vector is touched."""
     write_ivf_codes(_ivf_encoder(codebooks, item_id, item_vec)(corpus_assigned), path)
-
-
-def ivfpq_codes_upsert(
-    spark, corpus_path: str, codes_path: str, codebooks: np.ndarray,
-    cells: list[int], item_id: str = "item_id", item_vec: str = "embedding",
-) -> None:
-    """Re-encode the given cells of the IVF-PQ code table from the
-    post-upsert corpus with FROZEN codebooks (the lockstep contract of
-    operators/quantized.py::ivf_codes_upsert)."""
-    ivf_codes_upsert(
-        spark, corpus_path, codes_path,
-        _ivf_encoder(codebooks, item_id, item_vec), cells,
-    )
 
 
 def ivfpq_search(

@@ -16,6 +16,11 @@ Python in the scan). Everything else — the coarse-probe head of the IVF
 layouts, the shortlist window, the broadcast gate, the exact re-rank and
 the cell-partitioned code writes — lives here once.
 
+The family table (``_quantizers``) and the code-table build
+(``write_code_table`` / ``load_params``) live here too: the facade's
+per-collection tables and the query registry's per-fixture tables are
+built by the same encode → write → drift baseline → params commit.
+
 The partial top-``shortlist`` a kernel batch emits keeps every row tied
 with its last kept distance, so the global window sees a superset of the
 true (adist, item_id) top-``shortlist`` and ties at the boundary break by
@@ -24,6 +29,8 @@ item_id exactly as the window orders them.
 
 from __future__ import annotations
 
+import functools
+import json
 from collections.abc import Callable, Iterator
 from typing import NamedTuple
 
@@ -279,3 +286,172 @@ def ivf_codes_upsert(
     )
     present = {r.cell for r in fresh.select("cell").distinct().collect()}
     drop_empty_cell_dirs(codes_path, set(cells) - present)
+
+
+# -- the family table ------------------------------------------------------
+class _Quantizer(NamedTuple):
+    """What a caller needs of one compressed family beyond the shared
+    skeleton; ``params`` is a dict. Code tables key rows by an ``id``
+    column (``item_id`` in the written codes).
+
+    - ``fit(corpus, dim)`` trains the frozen params (pq's also takes
+      ``sample_fraction``: its books may train on a seeded sample);
+    - ``encode(df, params, passthrough=(), qerr=False)`` emits the codes,
+      plus each row's reconstruction error as ``_qerr`` when ``qerr``;
+    - ``baseline(corpus, params, dim)`` is the EP13 drift baseline
+      (None = the in-sample mean of ``_qerr``);
+    - ``to_meta(params)`` gives the JSON sidecar and the ``.npy`` array
+      (or None), ``from_meta(meta, npy_path)`` reads them back;
+    - ``can_recon(params)``: the params carry what ``_qerr`` needs;
+    - ``qerr_in_codes``: the FLAT code table keeps the ``_qerr`` column.
+    """
+
+    fit: Callable
+    encode: Callable
+    to_meta: Callable
+    from_meta: Callable
+    scorer: Callable
+    baseline: Callable | None = None
+    can_recon: Callable = lambda p: True
+    qerr_in_codes: bool = False
+
+
+@functools.cache
+def _quantizers() -> dict[str, _Quantizer]:
+    """The bq / pq / sq family table. The family modules import lazily:
+    the exact and graph routes never load them."""
+    from . import bq, pq, sq
+
+    def with_recon(encode, recon):
+        # codegen families: the recon column rides the encode as a
+        # passthrough, so one projection yields codes and error
+        def enc(df, p, passthrough=(), qerr=False):
+            if qerr:
+                df = df.withColumn("_qerr", recon(F.col("embedding"), p))
+                passthrough = (*passthrough, "_qerr")
+            return encode(df, p, passthrough)
+
+        return enc
+
+    def bq_fit(corpus, dim):
+        sums, n = bq.bq_train(corpus, item_vec="embedding", dim=dim)
+        lo, hi = bq.bq_side_means(corpus, sums, n, item_vec="embedding")
+        return {"sums": sums, "n": n, "lo": lo, "hi": hi}
+
+    def pq_fit(corpus, dim, sample_fraction=None):
+        return {"books": pq.pq_train(
+            corpus, item_vec="embedding", m=8 if dim % 8 == 0 else 4, k=16,
+            sample_fraction=sample_fraction,
+        )}
+
+    def sq_fit(corpus, dim):
+        vmin, scale = sq.sq_train(corpus, item_vec="embedding", dim=dim)
+        return {"vmin": vmin, "scale": scale}
+
+    def floats(a):
+        return [float(x) for x in a]
+
+    def array_or_none(m, key):
+        return np.array(m[key]) if key in m else None
+
+    return {
+        "bq": _Quantizer(
+            fit=bq_fit,
+            encode=with_recon(
+                lambda df, p, pt: bq.bq_encode(
+                    df, p["sums"], p["n"], item_id="id", passthrough=pt
+                ),
+                lambda v, p: bq.bq_recon_qerr(
+                    v, p["sums"], p["n"], p["lo"], p["hi"]
+                ),
+            ),
+            to_meta=lambda p: (
+                {"sums": [int(x) for x in p["sums"]], "n": p["n"],
+                 "lo": floats(p["lo"]), "hi": floats(p["hi"])},
+                None,
+            ),
+            from_meta=lambda m, npy: {
+                "sums": np.array(m["sums"], dtype=np.int64),
+                "n": int(m["n"]),
+                "lo": array_or_none(m, "lo"),
+                "hi": array_or_none(m, "hi"),
+            },
+            scorer=lambda p: bq.bq_scorer(p["sums"], p["n"]),
+            # sidecars written before the side means existed cannot
+            # reconstruct, so they record no drift
+            can_recon=lambda p: p["lo"] is not None,
+        ),
+        "pq": _Quantizer(
+            fit=pq_fit,
+            encode=lambda df, p, passthrough=(), qerr=False: pq.pq_encode(
+                df, p["books"], item_id="id", passthrough=passthrough,
+                keep_qerr="_qerr" if qerr else None,
+            ),
+            to_meta=lambda p: (
+                {"m": len(p["books"]), "k": len(p["books"][0])}, p["books"]
+            ),
+            from_meta=lambda m, npy: {"books": np.load(npy)},
+            scorer=lambda p: pq.pq_scorer(p["books"]),
+            qerr_in_codes=True,
+        ),
+        "sq": _Quantizer(
+            fit=sq_fit,
+            encode=with_recon(
+                lambda df, p, pt: sq.sq_encode(
+                    df, p["vmin"], p["scale"], item_id="id", passthrough=pt
+                ),
+                lambda v, p: sq.sq_recon_qerr(v, p["vmin"], p["scale"]),
+            ),
+            to_meta=lambda p: (
+                {"vmin": floats(p["vmin"]), "scale": floats(p["scale"])},
+                None,
+            ),
+            from_meta=lambda m, npy: {
+                "vmin": np.array(m["vmin"], dtype=np.float64),
+                "scale": np.array(m["scale"], dtype=np.float64),
+            },
+            scorer=lambda p: sq.sq_scorer(p["vmin"], p["scale"]),
+            # OUT-OF-SAMPLE baseline (sq_holdout_qerr): training rows
+            # never clamp under params fit on exactly them, so an
+            # in-sample baseline fires on in-distribution appends
+            baseline=lambda corpus, p, dim: sq.sq_holdout_qerr(corpus, dim),
+        ),
+    }
+
+
+def write_code_table(
+    q: _Quantizer, p: dict, corpus: DataFrame, codes: str, meta: str,
+    npy: str, drift_root: str, dim: int, ivf: bool = False,
+) -> None:
+    """Encode ``corpus`` (rows keyed by ``id``; ``cell`` on the IVF
+    layout) under the frozen params ``p`` and write the code table —
+    cell-partitioned when ``ivf`` — then its EP13 drift baseline at
+    ``drift_root``, then the params sidecar ``meta`` (+ ``npy``). The
+    meta is the commit point, written last: a table whose meta exists
+    is complete."""
+    from .drift import mean_coarse_qerr, write_drift_baseline
+
+    keep_qerr = q.qerr_in_codes and not ivf
+    enc = q.encode(corpus, p, ("cell",) if ivf else (), keep_qerr)
+    if ivf:
+        write_ivf_codes(enc, codes)
+    else:
+        enc.write.mode("overwrite").parquet(codes)
+    if keep_qerr:  # the encode already measured every row
+        base = mean_coarse_qerr(corpus.sparkSession.read.parquet(codes))
+    elif q.baseline is not None:
+        base = q.baseline(corpus, p, dim)
+    else:
+        base = mean_coarse_qerr(q.encode(corpus, p, (), True))
+    write_drift_baseline(drift_root, *base)
+    js, arr = q.to_meta(p)
+    if arr is not None:
+        np.save(npy, arr)
+    with open(meta, "w") as f:
+        json.dump(js, f)
+
+
+def load_params(q: _Quantizer, meta: str, npy: str) -> dict:
+    """The frozen params a ``write_code_table`` committed."""
+    with open(meta) as f:
+        return q.from_meta(json.load(f), npy)

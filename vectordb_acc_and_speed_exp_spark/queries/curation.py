@@ -903,26 +903,14 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the Spark plan demonstrates the 100 TB point: the pushed lang predicate
 # meets tight per-file min/max stats and skips every file outside the
 # lang range (a pruned scan where the unclustered layout reads all bytes).
-# Build is idempotent per sf_dir via the same fingerprint-marker
-# discipline as the ANN index builds (pipeline._get_or_build_ivf).
+# Build is idempotent per sf_dir via the registry's one artifact cycle
+# (pipeline._build_once), as the ANN index builds are.
 # --------------------------------------------------------------------------
 def _get_or_build_clustered_documents(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     from ..io.catalog import optimize_layout
-    from .pipeline import (
-        _build_is_fresh,
-        _index_root,
-        _mark_built,
-        _source_fingerprint,
-    )
+    from .pipeline import _build_once
 
-    root = _index_root(sf_dir)
-    path = os.path.join(root, "clustered_documents")
-    done = os.path.join(root, "clustered_documents._DONE")
-    fp = _source_fingerprint(sf_dir, "documents")
-    if not _build_is_fresh(done, fp):
-        os.makedirs(root, exist_ok=True)
+    def build(path):
         # small target so even the toy SFs produce a multi-file clustered
         # layout (at real scale the 128 MB default applies)
         load_table(spark, sf_dir, "documents").write.mode("overwrite").parquet(
@@ -931,8 +919,11 @@ def _get_or_build_clustered_documents(spark: SparkSession, sf_dir: str) -> str:
         optimize_layout(
             spark, path, ["lang", "source"], target_bytes_per_file=64 << 10
         )
-        _mark_built(done, fp)
-    return path
+
+    return _build_once(
+        sf_dir, "clustered_documents", ("clustered_documents",), build,
+        table="documents",
+    )[0]
 
 
 @register(

@@ -105,27 +105,18 @@ def _get_or_build_postings(spark: SparkSession, sf_dir: str) -> str:
     a bucket-pruned postings scan. Same fingerprint-invalidation +
     build/serve discipline as the ANN code tables (queries/pipeline.py)
     and dedup clusters (queries/textops.py)."""
-    import os
-
     from ..operators.postings import write_postings_index
-    from .pipeline import (
-        _build_is_fresh,
-        _index_root,
-        _mark_built,
-        _source_fingerprint,
-    )
+    from .pipeline import _build_once
 
-    root = _index_root(sf_dir)
-    path = os.path.join(root, "lexical_postings")
-    done = os.path.join(root, "lexical_postings._DONE")
+    def build(path):
+        write_postings_index(load_table(spark, sf_dir, "documents"), path)
+
     # ":v2" = bucketed terms/stats sidecar layout (round 7) — version the
     # fingerprint so artifacts written by older code rebuild, not misread
-    fp = _source_fingerprint(sf_dir, table="documents") + ":v2"
-    if not _build_is_fresh(done, fp):
-        os.makedirs(root, exist_ok=True)
-        write_postings_index(load_table(spark, sf_dir, "documents"), path)
-        _mark_built(done, fp)
-    return path
+    return _build_once(
+        sf_dir, "lexical_postings", ("lexical_postings",), build,
+        table="documents", version=":v2",
+    )[0]
 
 
 def _get_or_build_chunk_postings(spark: SparkSession, sf_dir: str) -> str:
@@ -142,25 +133,10 @@ def _get_or_build_chunk_postings(spark: SparkSession, sf_dir: str) -> str:
     entry's hash oracle pins it). The empty-chunk filter matches the
     inline path (and the oracle's ``trim(chunk) != ''``) so the chunk
     universe is identical."""
-    import os
-
     from ..operators.postings import write_postings_index
-    from .pipeline import (
-        _build_is_fresh,
-        _index_root,
-        _mark_built,
-        _source_fingerprint,
-    )
+    from .pipeline import _build_once
 
-    root = _index_root(sf_dir)
-    path = os.path.join(root, "chunk_postings")
-    done = os.path.join(root, "chunk_postings._DONE")
-    fp = (
-        _source_fingerprint(sf_dir, table="documents")
-        + f":v1:{_PCHUNK}x{_PSTRIDE}"
-    )
-    if not _build_is_fresh(done, fp):
-        os.makedirs(root, exist_ok=True)
+    def build(path):
         d = load_table(spark, sf_dir, "documents")
         k_max = F.greatest(
             F.ceil((F.length("text") - _PCHUNK) * 1.0 / _PSTRIDE), F.lit(0)
@@ -184,8 +160,11 @@ def _get_or_build_chunk_postings(spark: SparkSession, sf_dir: str) -> str:
             .filter(F.trim(F.col("text")) != "")
         )
         write_postings_index(chunks, path)
-        _mark_built(done, fp)
-    return path
+
+    return _build_once(
+        sf_dir, "chunk_postings", ("chunk_postings",), build,
+        table="documents", version=f":v1:{_PCHUNK}x{_PSTRIDE}",
+    )[0]
 
 
 def _query_terms_frame(spark: SparkSession) -> DataFrame:

@@ -218,26 +218,17 @@ def _get_or_build_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds once, not a tokenize pass each query re-pays — at bench scale
     it replaces ~0.8 s of tokenize+shingle per entry with a column-pruned
     parquet read."""
-    import os
-
     from ..operators.dedup import _shingle_table
-    from .pipeline import (
-        _build_is_fresh,
-        _index_root,
-        _mark_built,
-        _source_fingerprint,
-    )
+    from .pipeline import _build_once
 
-    root = _index_root(sf_dir)
-    path = os.path.join(root, "shingles3")
-    done = os.path.join(root, "shingles3._DONE")
-    fp = _source_fingerprint(sf_dir, table="documents")
-    if not _build_is_fresh(done, fp) or not os.path.exists(path):
-        os.makedirs(root, exist_ok=True)
+    def build(path):
         _shingle_table(
             load_table(spark, sf_dir, "documents"), "doc_id", "text"
         ).write.mode("overwrite").parquet(path)
-        _mark_built(done, fp)
+
+    path = _build_once(
+        sf_dir, "shingles3", ("shingles3",), build, table="documents"
+    )[0]
     return spark.read.parquet(path)
 
 
@@ -247,26 +238,9 @@ def _get_or_build_ngram_plists(spark: SparkSession, sf_dir: str):
     per-doc shingle counts, both pure functions of the corpus,
     MATERIALIZED once per fingerprint beside the shingles. The timed
     entry then pays pair expansion + count + jaccard only."""
-    import os
+    from .pipeline import _build_once
 
-    from .pipeline import (
-        _build_is_fresh,
-        _index_root,
-        _mark_built,
-        _source_fingerprint,
-    )
-
-    root = _index_root(sf_dir)
-    ppath = os.path.join(root, "ngram_plists")
-    spath = os.path.join(root, "shingle_sizes")
-    done = os.path.join(root, "ngram_plists._DONE")
-    fp = _source_fingerprint(sf_dir, table="documents") + f"|cap{_DF_CAP}"
-    if (
-        not _build_is_fresh(done, fp)
-        or not os.path.exists(ppath)
-        or not os.path.exists(spath)
-    ):
-        os.makedirs(root, exist_ok=True)
+    def build(ppath, spath):
         sh = _get_or_build_shingles(spark, sf_dir)
         rare = (
             sh.groupBy("sh")
@@ -284,7 +258,11 @@ def _get_or_build_ngram_plists(spark: SparkSession, sf_dir: str):
         sh.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("sz")
         ).write.mode("overwrite").parquet(spath)
-        _mark_built(done, fp)
+
+    ppath, spath = _build_once(
+        sf_dir, "ngram_plists", ("ngram_plists", "shingle_sizes"), build,
+        table="documents", version=f"|cap{_DF_CAP}",
+    )
     return spark.read.parquet(ppath), spark.read.parquet(spath)
 
 
@@ -297,31 +275,21 @@ def _get_or_build_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair query was re-paying per execution. Consumers: the
     minhash_lsh_dup_pairs serve path (collision + verify only at query
     time)."""
-    import os
-
     from ..operators.dedup import _band_table, _minhash_from_shingles
-    from .pipeline import (
-        _build_is_fresh,
-        _index_root,
-        _mark_built,
-        _source_fingerprint,
-    )
+    from .pipeline import _build_once
 
-    root = _index_root(sf_dir)
-    path = os.path.join(root, "minhash_bands")
-    done = os.path.join(root, "minhash_bands._DONE")
-    fp = _source_fingerprint(sf_dir, table="documents") + (
-        f"|h{_N_HASHES}b{_BAND_SIZE}"
-    )
-    if not _build_is_fresh(done, fp) or not os.path.exists(path):
-        os.makedirs(root, exist_ok=True)
+    def build(path):
         _band_table(
             _minhash_from_shingles(
                 _get_or_build_shingles(spark, sf_dir), _N_HASHES
             ),
             _BAND_SIZE,
         ).write.mode("overwrite").parquet(path)
-        _mark_built(done, fp)
+
+    path = _build_once(
+        sf_dir, "minhash_bands", ("minhash_bands",), build,
+        table="documents", version=f"|h{_N_HASHES}b{_BAND_SIZE}",
+    )[0]
     return spark.read.parquet(path)
 
 
@@ -517,25 +485,10 @@ def _get_or_build_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     operational shape — clusters are a maintained artifact, not something
     each downstream query re-mines (same _get_or_build discipline as the
     ANN index builds in queries/pipeline.py)."""
-    import os
-
     from ..operators.dedup import connected_components, minhash_lsh_pairs
-    from .pipeline import (
-        _build_is_fresh,
-        _index_root,
-        _mark_built,
-        _source_fingerprint,
-    )
+    from .pipeline import _build_once
 
-    root = _index_root(sf_dir)
-    path = os.path.join(root, "dedup_clusters")
-    pairs_path = os.path.join(root, "dedup_pairs")
-    done = os.path.join(root, "dedup_clusters._DONE")
-    fp = _source_fingerprint(sf_dir, table="documents")
-    # a marker written before the pairs artifact existed (or a manually
-    # deleted artifact) must trigger a rebuild of BOTH outputs
-    if not _build_is_fresh(done, fp) or not os.path.exists(pairs_path):
-        os.makedirs(root, exist_ok=True)
+    def build(path, pairs_path):
         pairs = minhash_lsh_pairs(
             load_table(spark, sf_dir, "documents"),
             id_col="doc_id",
@@ -557,7 +510,13 @@ def _get_or_build_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cluster_id"),
             (F.col("node") == F.col("cluster_id")).cast("int").alias("is_canonical"),
         ).write.mode("overwrite").parquet(path)
-        _mark_built(done, fp)
+
+    # a marker written before the pairs artifact existed (or a manually
+    # deleted artifact) rebuilds BOTH outputs
+    path = _build_once(
+        sf_dir, "dedup_clusters", ("dedup_clusters", "dedup_pairs"), build,
+        table="documents",
+    )[0]
     return spark.read.parquet(path)
 
 
