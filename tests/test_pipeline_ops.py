@@ -343,7 +343,7 @@ def test_index_cache_invalidates_on_source_change(spark, tmp_path):
     shutil.rmtree(_index_root(sf_dir), ignore_errors=True)
 
 
-def test_deleted_code_table_rebuilds(spark, tmp_path):
+def test_deleted_code_table_rebuilds(spark, sf_dir, tmp_path):
     """A fresh marker does not cover a missing output: deleting the pq
     code table rebuilds it, with the same rows."""
     import os
@@ -352,10 +352,10 @@ def test_deleted_code_table_rebuilds(spark, tmp_path):
     from vectordb_acc_and_speed_exp_spark.queries import load_all
     from vectordb_acc_and_speed_exp_spark.queries.pipeline import _index_root
 
-    sf_dir = str(tmp_path / "sf_copy")
+    src, sf_dir = sf_dir, str(tmp_path / "sf_copy")
     os.makedirs(sf_dir)
     shutil.copy(
-        "/root/testdata/sf0.001/embeddings.parquet",
+        os.path.join(src, "embeddings.parquet"),
         os.path.join(sf_dir, "embeddings.parquet"),
     )
     root = _index_root(sf_dir)
@@ -370,7 +370,9 @@ def test_deleted_code_table_rebuilds(spark, tmp_path):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_mtlsh_entry_miss_reroutes_to_exact(spark, tmp_path, monkeypatch):
+def test_mtlsh_entry_miss_reroutes_to_exact(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """No grid budget meeting the target stores a null budget, and the
     entry serves the exact scan: no bucket budget certifies the target."""
     import json
@@ -387,10 +389,10 @@ def test_mtlsh_entry_miss_reroutes_to_exact(spark, tmp_path, monkeypatch):
         mt_lsh_ann_topk,
     )
 
-    sf_dir = str(tmp_path / "sf_copy")
+    src, sf_dir = sf_dir, str(tmp_path / "sf_copy")
     os.makedirs(sf_dir)
     shutil.copy(
-        "/root/testdata/sf0.001/embeddings.parquet",
+        os.path.join(src, "embeddings.parquet"),
         os.path.join(sf_dir, "embeddings.parquet"),
     )
     root = _index_root(sf_dir)

@@ -1,4 +1,5 @@
-"""Pins of the query registry's index artifacts on a private copy of sf0.001.
+"""Pins of the query registry's index artifacts on a private copy of the
+small fixture (``sf_dir``, sf0.001).
 
 The compressed ``ann_*`` entries must return exactly the rows of an inline
 composition of the public operators at the budgets their
@@ -44,12 +45,12 @@ def _markers(root):
 
 
 @pytest.fixture(scope="module")
-def reg(spark, tmp_path_factory):
+def reg(spark, sf_dir, tmp_path_factory):
     from vectordb_acc_and_speed_exp_spark.queries import load_all
     from vectordb_acc_and_speed_exp_spark.queries.pipeline import _index_root
 
     sf = str(tmp_path_factory.mktemp("registry") / "sf")
-    shutil.copytree("/root/testdata/sf0.001", sf)
+    shutil.copytree(sf_dir, sf)
     root = _index_root(sf)
     shutil.rmtree(root, ignore_errors=True)
     registry = load_all()
