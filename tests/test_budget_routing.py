@@ -293,17 +293,21 @@ def test_target_and_explicit_budget_refused(store, served):
         vs.query("c", query_vecs=q, k=K, mode="exact", target_recall=0.8)
 
 
+@pytest.mark.parametrize("target", [None, 0.8, 1.0])
 @pytest.mark.parametrize("mode", ["bq", "pq", "sq", "ivfbq", "ivfpq", "ivfsq"])
-def test_one_row_count_per_compressed_query(store, served, monkeypatch, mode):
+def test_one_row_count_per_compressed_query(
+    store, served, monkeypatch, mode, target
+):
     # the collection's row count feeds the broadcast gate, the full
-    # budget and the curve staleness check: read once per query
+    # budget and the curve staleness check: read once per query, with
+    # or without a recall target
     vs = store[0]
     counted = []
     nrows = vs._collection_nrows
     monkeypatch.setattr(
         vs, "_collection_nrows", lambda name: counted.append(name) or nrows(name)
     )
-    _serve(store, served, mode, None)
+    _serve(store, served, mode, target)
     assert counted == ["c"]
 
 

@@ -67,7 +67,12 @@ from .operators.probetune import (
     choose_budget,
     curve_is_stale,
 )
-from .operators.quantized import _quantizers, load_params, write_code_table
+from .operators.quantized import (
+    _quantizers,
+    ivf_codes_upsert,
+    load_params,
+    write_code_table,
+)
 
 
 _QUANT_FAMILIES = ("bq", "pq", "sq")
@@ -776,8 +781,6 @@ class VectorStore:
             cells = ivf_index_upsert(
                 self.spark, corpus_path, docs, cents, item_id="id"
             )
-            from .operators.quantized import ivf_codes_upsert
-
             for fam, q in _quantizers().items():
                 _, meta, codes, npy, _ = self._qpaths(name, fam, ivf=True)
                 if not os.path.exists(meta):
@@ -1068,7 +1071,7 @@ class VectorStore:
 
     def _choose(
         self, name: str, mode: str, k: int, target: float, full: int | None,
-        n_corpus: int | None = None,
+        n_corpus: int,
     ) -> int | None:
         """probetune.choose_budget over ``mode``'s curve. A target >= 1
         reads no curve: only ``full`` guarantees an exact answer, so the
@@ -1153,7 +1156,7 @@ class VectorStore:
         root = self._qpaths(name, fam)[0]
         fname = self._k_fname("_filtered_shortlist_curve.json", k)
         n = self._collection_nrows(name)
-        full = self._curve(name, fam, k)
+        full = self._curve(name, fam, k, n)
         meta = read_curve_meta(root, fname)
         want_bins = {f"{f:.2f}" for f in self._FILTERED_BINS}
         if not curve_is_stale(meta, n, k=k) and set(
@@ -1357,8 +1360,7 @@ class VectorStore:
         return max(k, s_up)
 
     def _ensure_composed_budget(
-        self, name: str, mode: str, target: float, k: int = 10,
-        n_corpus: int | None = None,
+        self, name: str, mode: str, target: float, k: int, n_corpus: int,
     ) -> dict:
         """Measured joint (n_probe, shortlist) for mode in {ivfbq, ivfpq,
         ivfsq} at the given recall target AND requested k — probetune's
@@ -1384,11 +1386,10 @@ class VectorStore:
         # CALIB staleness already retires pre-k sidecars)
         key = f"{target:.2f}" if k == 10 else f"{target:.2f}@k{k}"
         meta = read_curve_meta(root, fname)
-        n = self._collection_nrows(name) if n_corpus is None else n_corpus
-        stale = curve_is_stale(meta, n)
+        stale = curve_is_stale(meta, n_corpus)
         if not stale and key in meta.get("targets", {}):
             return meta["targets"][key]
-        probe_curve = self._curve(name, "probe", k, n)
+        probe_curve = self._curve(name, "probe", k, n_corpus)
         fam = mode.removeprefix("ivf")
         codes, p, _, _ = self._ensure_codes(name, fam, ivf=True)
         b = composed_serving_budget(
@@ -1405,7 +1406,8 @@ class VectorStore:
         # at the original corpus size (ADVICE r09) — only a from-stale
         # recalibration re-bases n_corpus
         base_n = (
-            int(n) if stale or not meta else int(meta.get("n_corpus", n))
+            int(n_corpus) if stale or not meta
+            else int(meta.get("n_corpus", n_corpus))
         )
         publish_marker(
             os.path.join(root, fname),
@@ -1415,7 +1417,7 @@ class VectorStore:
 
     def _resolve_shortlist(
         self, name: str, fam: str, k: int, shortlist: int | None,
-        target: float = DEFAULT_TARGET_RECALL, n_corpus: int | None = None,
+        target: float, n_corpus: int,
     ) -> int:
         """Serving shortlist for a flat code family: the caller's explicit
         value, else the smallest calibrated budget meeting ``target`` —
@@ -1428,13 +1430,13 @@ class VectorStore:
         re-rank pool never returns < k rows), not the certification."""
         if shortlist is not None:
             return shortlist
-        n = self._collection_nrows(name) if n_corpus is None else n_corpus
-        return max(k, self._choose(name, fam, k, target, n, n))
+        return max(k, self._choose(
+            name, fam, k, target, n_corpus, n_corpus
+        ))
 
     def _resolve_composed(
         self, name: str, mode: str, n_probe: int | None,
-        shortlist: int | None, k: int = 10,
-        target: float = DEFAULT_TARGET_RECALL, n_corpus: int | None = None,
+        shortlist: int | None, k: int, target: float, n_corpus: int,
     ) -> tuple[int, int]:
         """Serving (n_probe, shortlist) for ivfbq/ivfpq/ivfsq: explicit
         values win; anything unspecified comes from the measured joint
@@ -1444,19 +1446,19 @@ class VectorStore:
         at k (ADVICE r09), a structural guard like the flat one."""
         if n_probe is not None and shortlist is not None:
             return n_probe, shortlist
-        n = self._collection_nrows(name) if n_corpus is None else n_corpus
         if target >= 1.0:
             b = {"n_probe": self._ensure_ivf_index(name)[1].count(),
-                 "shortlist": n}
+                 "shortlist": n_corpus}
         else:
-            b = self._ensure_composed_budget(name, mode, target, k, n)
+            b = self._ensure_composed_budget(name, mode, target, k, n_corpus)
         return (
             n_probe if n_probe is not None else b["n_probe"],
             shortlist if shortlist is not None else max(k, b["shortlist"]),
         )
 
     def _target_budget(
-        self, name: str, mode: str, k: int, where: str | None, target: float
+        self, name: str, mode: str, k: int, where: str | None, target: float,
+        n_corpus: int,
     ) -> tuple[str, object]:
         """``target_recall=`` resolved once, before any serve work:
         (served mode, budget) under probetune.choose_budget — the
@@ -1485,18 +1487,20 @@ class VectorStore:
         if where is not None and mode in ("auto", *_FULL_BUDGET, *_COMPOSED):
             if target >= 1.0:
                 return "auto", self._ensure_ivf_index(name)[1].count()
-            curve = self._curve(name, "probe", k)
+            curve = self._curve(name, "probe", k, n_corpus)
             return "auto", choose_budget(curve, target, max(curve))
         if mode in _COMPOSED:
             return mode, self._resolve_composed(
-                name, mode, None, None, k, target
+                name, mode, None, None, k, target, n_corpus
             )
         if mode in _QUANT_FAMILIES:
             return mode, (None, self._resolve_shortlist(
-                name, mode, k, None, target
+                name, mode, k, None, target, n_corpus
             ))
         if mode in _FULL_BUDGET:
-            b = self._choose(name, mode, k, target, _FULL_BUDGET[mode])
+            b = self._choose(
+                name, mode, k, target, _FULL_BUDGET[mode], n_corpus
+            )
             return ("exact", None) if b is None else (mode, b)
         raise ValueError(
             f"target_recall= does not apply to mode={mode!r}"
@@ -1982,14 +1986,18 @@ class VectorStore:
         # healing would discard the curve this query's budget came from
         self._heal_torn_freshen(name)
         budget = None  # a resolved target's lsh bits / mtlsh buckets / ef
+        # the collection's row count, read once per query: the curves'
+        # staleness check, the full budgets and the re-rank broadcast gate
+        n_corpus = None
         if target_recall is not None:
             if n_probe is not None or shortlist is not None:
                 raise ValueError(
                     "give target_recall= OR explicit n_probe=/shortlist= "
                     "budgets, not both"
                 )
+            n_corpus = self._collection_nrows(name)
             mode, budget = self._target_budget(
-                name, mode, k, where, target_recall
+                name, mode, k, where, target_recall, n_corpus
             )
             if mode == "auto":
                 auto_opts = dict(auto_opts or {}, min_probe=budget)
@@ -2126,8 +2134,11 @@ class VectorStore:
             )
             return self._merge_graph_pending(name, qd, res, k)
         if mode in ("bq", "pq", "sq", "ivfbq", "ivfpq", "ivfsq"):
+            if n_corpus is None:
+                n_corpus = self._collection_nrows(name)
             return self._quantized_query(
-                name, qdf, corpus, mode, k, shortlist, n_probe, where
+                name, qdf, corpus, mode, k, shortlist, n_probe, where,
+                n_corpus,
             )
         if mode == "mtlsh":
             from .operators.mtlsh import mt_lsh_ann_pruned
@@ -2147,7 +2158,7 @@ class VectorStore:
     def _quantized_query(
         self, name: str, qdf: DataFrame, corpus: DataFrame, mode: str,
         k: int, shortlist: int | None, n_probe: int | None,
-        where: str | None,
+        where: str | None, n_corpus: int,
     ) -> DataFrame:
         """The six compressed modes: one family scorer on the shared
         shortlist → exact-rerank skeleton (operators/quantized.py), always
@@ -2170,10 +2181,10 @@ class VectorStore:
             name, fam, ivf=fam != mode
         )
         scorer = _quantizers()[fam].scorer(p)
-        n_corpus = self._collection_nrows(name)
         if fam != mode:
             n_probe, shortlist = self._resolve_composed(
-                name, mode, n_probe, shortlist, k=k, n_corpus=n_corpus
+                name, mode, n_probe, shortlist, k, DEFAULT_TARGET_RECALL,
+                n_corpus,
             )
             # the bq scorer's hamming column stays internal: query()
             # returns the four documented columns on every mode
@@ -2191,7 +2202,7 @@ class VectorStore:
         return shortlist_search(
             qdf, encoded, corpus, scorer, k,
             self._resolve_shortlist(
-                name, fam, k, shortlist, n_corpus=n_corpus
+                name, fam, k, shortlist, DEFAULT_TARGET_RECALL, n_corpus
             ),
             item_id="id", n_corpus=n_corpus,
         ).select("query_id", "rank", "item_id", "dist")

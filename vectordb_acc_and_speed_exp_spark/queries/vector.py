@@ -1313,13 +1313,14 @@ FROM ranked WHERE rank <= 10
     "literal; the measured serving default lives in ann_bq_tuned",
 )
 def ann_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.bq import bq_search_rerank, bq_train
+    from ..operators.bq import bq_search_rerank
+    from .pipeline import _flat_codes
 
     emb = load_table(spark, sf_dir, "embeddings")
-    sums, n = bq_train(emb, item_vec="embedding", dim=64)
+    enc, p = _flat_codes(spark, sf_dir, "bq")
     res = bq_search_rerank(
-        _query_set(spark, sf_dir), emb, sums, n, k=10, shortlist=100,
-        item_id="vec_id",
+        _query_set(spark, sf_dir), emb, p["sums"], p["n"], k=10,
+        shortlist=100, item_id="vec_id", encoded=enc,
     )
     return res.select(
         "query_id", "rank", "item_id",
